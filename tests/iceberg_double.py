@@ -35,6 +35,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tsaug_spark.sources.tables import replace_condition
+
 
 class InPlaceLazyTable:
     """Test double matching IcebergTable's contract + storage semantics."""
@@ -79,18 +81,27 @@ class InPlaceLazyTable:
         return str(meta["snapshot"]) if meta["snapshot"] else None
 
     # ----------------------------------------------------------- read
-    def read(self, spark: SparkSession) -> DataFrame:
+    def read(
+        self,
+        spark: SparkSession,
+        partitions: "list | None" = None,
+        since=None,
+    ) -> DataFrame:
         """Lazy read over the CURRENT (mutable) data location.
 
         Like an Iceberg scan, the plan resolves against table state; a
         replace between plan construction and action invalidates it —
         callers must materialize before overwriting, which is exactly
-        the discipline under test.
+        the discipline under test.  ``partitions``/``since`` filter to
+        the rows ``overwrite_partitions`` would replace.
         """
         if not self.exists():
             raise FileNotFoundError(f"no table at {self.path}")
         spark.catalog.refreshByPath(self._data)
-        return spark.read.parquet(self._data)
+        df = spark.read.parquet(self._data)
+        if partitions is None:
+            return df
+        return df.filter(replace_condition("partition_id", partitions, since))
 
     # --------------------------------------------------------- writes
     def _replace_dir(self, df: DataFrame) -> None:
@@ -125,12 +136,14 @@ class InPlaceLazyTable:
         df: DataFrame,
         partition_col: str = "partition_id",
         partitions: "list | None" = None,
+        since=None,
     ) -> str:
         """Value-keyed dynamic overwrite (same contract as
         IcebergTable's condition-based ``overwrite``): only rows whose
         ``partition_col`` is in ``partitions`` (default: values present
-        in ``df``) are replaced; kept rows are carried over untouched.
-        Explicit ``partitions`` + empty ``df`` clears them."""
+        in ``df``) and, given ``since``, whose ``bucket_ts >= since``
+        are replaced; kept rows are carried over untouched.  Explicit
+        ``partitions`` + empty ``df`` clears them."""
         df = df.localCheckpoint(eager=True)
         if not self.exists():
             self._replace_dir(df)
@@ -142,7 +155,12 @@ class InPlaceLazyTable:
             ]
         kept = (
             self.read(df.sparkSession)
-            .filter(~F.col(partition_col).isin(list(partitions)))
+            .filter(
+                ~F.coalesce(
+                    replace_condition(partition_col, partitions, since),
+                    F.lit(False),
+                )
+            )
             .localCheckpoint(eager=True)
         )
         self._replace_dir(

@@ -643,3 +643,78 @@ def test_op_downsample_tier_rejects_repeats(spark, tmp_path):
     job = RollupJob(spark, str(tmp_path / "rep"), n_partitions=1)
     with pytest.raises(ValueError, match="repeats"):
         job.op_downsample_tier("1h", "x", Pool(size=4, repeats=2))
+
+
+@pytest.mark.parametrize(
+    "grace, seconds",
+    [
+        ("90 minutes", 5400),
+        ("1 hour 30 minutes", 5400),
+        ("2 hours", 7200),
+        ("1 day 1 second", 86401),
+        ("1 Week", 604800),
+    ],
+)
+def test_grace_seconds_parses_compound_strings(grace, seconds):
+    from tsaug_spark.sources.checkpoint import _grace_seconds
+
+    assert _grace_seconds(grace) == seconds
+
+
+@pytest.mark.parametrize(
+    "grace",
+    ["", "hour", "1", "1 fortnight", "1.5 hours", "1 hour 30", "-1 hour",
+     "one hour"],
+)
+def test_grace_seconds_rejects_malformed_strings(grace):
+    from tsaug_spark.sources.checkpoint import _grace_seconds
+
+    with pytest.raises(ValueError, match="malformed grace"):
+        _grace_seconds(grace)
+
+
+def test_update_rebuilds_legacy_unwindowed_chunk_store(spark, tmp_path):
+    """A chunk store written before time windowing holds one chunk per
+    conversation spanning several days.  An incremental update must
+    fall back to the full rebuild for those conversations, or their
+    chunk history before the window floor is lost."""
+    from tsaug_spark.datagen import generate_transcripts
+
+    src = generate_transcripts(
+        spark, n_convs=6, avg_turns=40, hot_convs=0, mean_gap_s=7200,
+        seed=7,
+    ).cache()
+    max_ts = src.agg(F.max(F.unix_timestamp("ts"))).collect()[0][0]
+    base = src.filter(F.unix_timestamp("ts") < max_ts - 6 * 3600)
+    job = RollupJob(spark, str(tmp_path / "legacy"), n_partitions=2,
+                    source_snapshot="s1")
+    job.run(base, "1m")
+    # rewrite the chunk store the unwindowed way: one chunk per conv
+    tier = job.table("tier_1m").read(spark).drop("partition_id")
+    legacy = compress_tier(tier, METRIC_COLS).withColumn(
+        "partition_id",
+        F.pmod(F.xxhash64("conv_id"), F.lit(2)).cast("int"),
+    )
+    job.table("tier_1m_chunks").overwrite(legacy)
+    day = F.floor(F.unix_timestamp("ts_min") / 86400) != F.floor(
+        F.unix_timestamp("ts_max") / 86400
+    )
+    assert job.table("tier_1m_chunks").read(spark).filter(day).count() > 0
+
+    job2 = RollupJob(spark, str(tmp_path / "legacy"), n_partitions=2,
+                     source_snapshot="s2")
+    assert job2.update(src, "1m", grace="1 hour", new_snapshot="s2") > 0
+    cols = ["conv_id", "bucket_ts", *METRIC_COLS]
+    got = (
+        decompress_tier(job2.table("tier_1m_chunks").read(spark), METRIC_COLS)
+        .select(*cols).orderBy("conv_id", "bucket_ts").toPandas()
+    )
+    want = (
+        job2.read_tier("1m").select(*cols)
+        .orderBy("conv_id", "bucket_ts").toPandas()
+    )
+    assert len(want) == rollup_transcripts(src, "1m").count()
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True),
+        check_dtype=False,
+    )

@@ -16,13 +16,20 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 def test_make_pyfiles_zip_is_importable(tmp_path):
+    zip_path = tmp_path / "tsaug_spark.zip"
     subprocess.run(
-        [sys.executable, str(REPO / "tools" / "make_pyfiles.py")],
+        [sys.executable, str(REPO / "tools" / "make_pyfiles.py"),
+         str(zip_path)],
         check=True,
         capture_output=True,
     )
-    zip_path = REPO / "dist" / "tsaug_spark.zip"
-    assert zip_path.exists()
+    # the build is reproducible, so the committed zip (what
+    # spark-submit ships) must equal a fresh build of the sources:
+    # a stale zip would ship old package code
+    committed = REPO / "dist" / "tsaug_spark.zip"
+    assert committed.read_bytes() == zip_path.read_bytes(), (
+        "dist/tsaug_spark.zip is stale: run python tools/make_pyfiles.py"
+    )
     # the zip must be a self-contained package root (what --py-files
     # ships to executors): import it from a clean interpreter with the
     # repo NOT on sys.path
@@ -181,7 +188,8 @@ def test_rollup_job_cli_update_late_data(spark, transcripts, tmp_path):
 def test_spark_submit_py_files_end_to_end(spark, transcripts, tmp_path):
     """The literal north-rule run mode: ``spark-submit --py-files
     dist/tsaug_spark.zip jobs/rollup_job.py`` — executed from OUTSIDE
-    the repo (script and zip copied to a temp dir, PYTHONPATH empty) so
+    the repo (script copied and zip built into a temp dir, PYTHONPATH
+    empty, so the test never rewrites the committed zip) so
     the shipped zip is the only source of the package, exactly as on a
     cluster."""
     import shutil
@@ -191,16 +199,16 @@ def test_spark_submit_py_files_end_to_end(spark, transcripts, tmp_path):
     spark_submit = (
         Path(pyspark.__file__).resolve().parent / "bin" / "spark-submit"
     )
+    zip_copy = tmp_path / "tsaug_spark.zip"
     subprocess.run(
-        [sys.executable, str(REPO / "tools" / "make_pyfiles.py")],
+        [sys.executable, str(REPO / "tools" / "make_pyfiles.py"),
+         str(zip_copy)],
         check=True, capture_output=True,
     )
     src = str(tmp_path / "in")
     transcripts.write.mode("overwrite").parquet(src)
     job_copy = tmp_path / "rollup_job.py"
-    zip_copy = tmp_path / "tsaug_spark.zip"
     shutil.copy(REPO / "jobs" / "rollup_job.py", job_copy)
-    shutil.copy(REPO / "dist" / "tsaug_spark.zip", zip_copy)
     work = str(tmp_path / "work")
 
     proc = subprocess.run(

@@ -229,3 +229,23 @@ def test_reaggregate_calendar_month_boundaries(spark):
 
     with _pytest.raises(ValueError):
         reaggregate_calendar(df, "fortnight")
+
+
+def test_bucket_start_floors_pre_1970_like_bucket_epoch_s(spark):
+    """A 1969 turn lands in the same bucket on both bucketing paths:
+    ``bucket_start`` floors, as ``bucket_epoch_s`` does, instead of
+    truncating toward the epoch."""
+    from tsaug_spark.plans.rollup import TIERS, bucket_epoch_s, bucket_start
+
+    df = spark.createDataFrame(
+        [("1969-12-31 23:59:30",), ("1969-12-30 11:00:01",),
+         ("1970-01-01 00:00:30",)],
+        "s string",
+    ).select(F.to_timestamp("s").alias("ts"))
+    for tier in TIERS:
+        got = df.select(
+            F.unix_timestamp(bucket_start(F.col("ts"), tier)).alias("a"),
+            bucket_epoch_s("ts", tier),
+        ).collect()
+        assert all(r["a"] == r["bucket_s"] for r in got), (tier, got)
+        assert all(r["a"] < 0 for r in got[:2])

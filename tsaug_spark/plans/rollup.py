@@ -41,10 +41,12 @@ METRIC_COLS = ["turn_rate", "tool_usage", "text_len"]
 
 
 def bucket_start(ts: Column, tier: str) -> Column:
-    """Truncate a timestamp to its tier bucket start."""
+    """Floor a timestamp to its tier bucket start (floor, like
+    ``bucket_epoch_s``, so a pre-1970 turn lands in the same bucket on
+    both paths)."""
     seconds = TIERS[tier][1]
     return F.timestamp_seconds(
-        (F.unix_timestamp(ts) / seconds).cast("long") * seconds
+        F.floor(F.unix_timestamp(ts) / seconds) * seconds
     )
 
 

@@ -24,6 +24,10 @@ ENGINE_CONF: dict[str, str] = {
     # sandbox scale every file is a single split anyway.
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # INT96 (the default) stores no footer min/max: TIMESTAMP_MICROS gives
+    # every bucket_ts column statistics that snapshot commits and reads
+    # prune data files on (sources/tables.py).
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.driver.memory": "8g",
     "spark.ui.enabled": "false",
 }

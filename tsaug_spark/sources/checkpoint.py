@@ -72,11 +72,21 @@ _GRACE_UNITS = {
 
 
 def _grace_seconds(grace: str) -> int:
-    """Parse the ``"<n> <unit>"`` grace strings (``"2 hours"``) to
-    seconds — the driver-side twin of ``INTERVAL <grace>`` so cutoffs
-    can be computed as literals and PUSHED DOWN to the source scan."""
-    n, unit = grace.split()
-    return int(n) * _GRACE_UNITS[unit.rstrip("s")]
+    """Parse grace strings of ``"<n> <unit>"`` pairs (``"2 hours"``,
+    ``"1 hour 30 minutes"``) to seconds — the Python-side twin of
+    ``INTERVAL <grace>`` so cutoffs can be computed as literals.
+    Raises ValueError on anything else."""
+    words = grace.split()
+    pairs = list(zip(words[::2], words[1::2]))
+    if not pairs or len(words) % 2 or not all(
+        n.isdigit() and u.lower().rstrip("s") in _GRACE_UNITS
+        for n, u in pairs
+    ):
+        raise ValueError(
+            f"malformed grace {grace!r}: expected '<n> <unit>' pairs "
+            f"with units {sorted(_GRACE_UNITS)}, e.g. '1 hour 30 minutes'"
+        )
+    return sum(int(n) * _GRACE_UNITS[u.lower().rstrip("s")] for n, u in pairs)
 
 
 def _ts_epoch(ts) -> int:
@@ -178,9 +188,9 @@ class RollupJob:
             ).collect()[0]
 
             # time-clustered tier files (repartitionByRange on
-            # bucket_ts): each parquet file covers a narrow time band,
-            # so the incremental paths' literal min-cutoff filter
-            # prunes to the tail files instead of rescanning history
+            # bucket_ts): each covers a narrow time band, so the
+            # since-bounded replaces of update/cascade_update keep the
+            # earlier files by reference
             self.table(f"tier_{tier}").append(
                 rolled.withColumn("partition_id", F.lit(p))
                 .repartitionByRange(8, "bucket_ts")
@@ -400,12 +410,11 @@ class RollupJob:
         self, name: str, p: int, rows: DataFrame
     ) -> None:
         """Commit ``rows`` as the new content of partition ``p`` via the
-        backend's dynamic-partition overwrite: Iceberg maps this to
-        ``overwritePartitions`` (metadata-only commit touching just
-        partition ``p``, replacement rows materialized first so a
+        backend's dynamic-partition overwrite: Iceberg maps this to a
+        condition overwrite (replacement rows materialized first so a
         self-derived plan can't re-read the overwritten table); the
-        parquet-snapshot backend rewrites kept+new into a fresh
-        snapshot directory before the atomic pointer flip."""
+        parquet-snapshot backend keeps every file of other partitions
+        by reference and writes only ``rows``."""
         t = self.table(name)
         if not t.exists():
             t.append(rows)
@@ -415,6 +424,35 @@ class RollupJob:
         # cascade re-run after the fine rows were retention-expired),
         # which a touched-set inferred from an empty df cannot express
         t.overwrite_partitions(rows, "partition_id", partitions=[p])
+
+    def _replace_tails(
+        self, name: str, rolled: DataFrame, cuts: "dict[int, int]"
+    ) -> None:
+        """Replace, in one commit, each partition ``p``'s rows with
+        ``bucket_ts >= cuts[p]`` (epoch seconds) by its rows of
+        ``rolled``.  The commit is bounded by the earliest cut: the
+        backend replaces only rows at/after it, so the kept rows between
+        it and each later cut ride along, and every earlier data file
+        stays as it is."""
+        pids = sorted(cuts)
+        since = _epoch_ts(min(cuts.values()))
+        replace_df = self.spark.createDataFrame(
+            [(p, _epoch_ts(cuts[p])) for p in pids],
+            "partition_id int, cut_ts timestamp",
+        )
+        t = self.table(name)
+        kept = (
+            t.read(self.spark, partitions=pids, since=since)
+            .join(F.broadcast(replace_df), "partition_id")
+            .filter(F.col("bucket_ts") < F.col("cut_ts"))
+            .drop("cut_ts")
+        )
+        t.overwrite_partitions(
+            kept.unionByName(rolled.select(*kept.columns)),
+            "partition_id",
+            partitions=pids,
+            since=since,
+        )
 
     def _rebuild_chunks(
         self,
@@ -481,16 +519,35 @@ class RollupJob:
                 .distinct()
                 .collect()
             ]
-        kept_tier = (
-            self.table(f"tier_{tier}")
-            .read(self.spark)
-            .filter(F.col("partition_id").isin([int(p) for p in pids]))
+        kept_tier = self.table(f"tier_{tier}").read(
+            self.spark, partitions=[int(p) for p in pids]
         )
         src_rows = kept_tier.join(F.broadcast(affected), "conv_id").drop(
             "partition_id"
         )
+        legacy = []
         if wfloor is not None:
-            src_rows = src_rows.filter(F.col("bucket_ts") >= F.lit(wfloor))
+            # a chunk crossing a window boundary predates the windowed
+            # store (one chunk per conversation): its conversation falls
+            # back to the full rebuild, or its history before the
+            # window floor would be lost
+            w = F.lit(window_s)
+            legacy = [
+                r[0]
+                for r in chunk_table.read(self.spark, partitions=pids)
+                .join(affected, "conv_id", "left_semi")
+                .filter(
+                    F.floor(F.unix_timestamp("ts_min") / w)
+                    != F.floor(F.unix_timestamp("ts_max") / w)
+                )
+                .select("conv_id")
+                .distinct()
+                .collect()
+            ]
+            src_rows = src_rows.filter(
+                (F.col("bucket_ts") >= F.lit(wfloor))
+                | F.col("conv_id").isin(legacy)
+            )
         rebuilt = (
             compress_tier(src_rows, METRIC_COLS, window_s=window_s)
             .withColumn("partition_id", part_col)
@@ -498,9 +555,7 @@ class RollupJob:
             # stats collect below then reads the checkpointed blocks
             .transform(lambda d: truncate_lineage(d, eager=False))
         )
-        kept_chunks = chunk_table.read(self.spark).filter(
-            F.col("partition_id").isin(pids)
-        )
+        kept_chunks = chunk_table.read(self.spark, partitions=pids)
         if wfloor is not None:
             # carry over the affected conversations' pre-window chunks
             # byte-identical; drop only the windows being rebuilt
@@ -509,7 +564,10 @@ class RollupJob:
                 kept_chunks.join(F.broadcast(drop), "conv_id", "left")
                 .filter(
                     F.col("_aff").isNull()
-                    | (F.col("ts_max") < F.lit(wfloor))
+                    | (
+                        (F.col("ts_max") < F.lit(wfloor))
+                        & ~F.col("conv_id").isin(legacy)
+                    )
                 )
                 .drop("_aff")
             )
@@ -611,7 +669,8 @@ class RollupJob:
         scan to the recent partitions/files (partition pruning on a
         ts-partitioned table), so an update touches only the re-rollable
         tail, never the full history.  All watermarked partitions are
-        re-rolled in ONE job and replaced in ONE table commit (the
+        re-rolled in ONE job and replaced in ONE table commit that
+        writes only the re-rolled tail (the
         per-partition-loop formulation rewrote the tier table once per
         partition — O(P x table) write amplification); per-partition
         lineage + metrics rows still land in the manifest.  A crash
@@ -696,27 +755,10 @@ class RollupJob:
             rolled.unpersist()
             return touched
 
-        # single commit: drop each re-rolled partition's tail, append
+        # single commit: replace each re-rolled partition's tail with
         # its fresh rows (partitions with no new rows keep theirs)
-        replace_df = self.spark.createDataFrame(
-            [(p, _epoch_ts(cuts[p])) for p in bounds],
-            "partition_id int, cut_ts timestamp",
-        )
-        tier_table = self.table(f"tier_{tier}")
-        existing = tier_table.read(self.spark)
-        kept = (
-            existing.join(F.broadcast(replace_df), "partition_id", "left")
-            .filter(
-                F.col("cut_ts").isNull()
-                | (F.col("bucket_ts") < F.col("cut_ts"))
-            )
-            .drop("cut_ts")
-        )
-        tier_table.overwrite(
-            kept.unionByName(rolled.select(*kept.columns))
-            .repartitionByRange(
-                max(8, self.n_partitions), "bucket_ts"
-            )
+        self._replace_tails(
+            f"tier_{tier}", rolled, {p: cuts[p] for p in bounds}
         )
         # keep the compressed store consistent with the re-rolled tier
         # rows (decompress(chunks) == tier must survive late data);
@@ -873,8 +915,8 @@ def cascade_tier(
     Re-running under a NEW source snapshot (the late-data workflow)
     REPLACES each partition's coarse rows rather than appending —
     otherwise every re-run would stack duplicate buckets into the
-    coarse tier.  On Iceberg this is ``overwritePartitions``; the
-    parquet-snapshot fallback rewrites the table minus the partition.
+    coarse tier.  On Iceberg this is a condition overwrite; the
+    parquet-snapshot table keeps other partitions' files by reference.
     """
     from tsaug_spark.plans.rollup import reaggregate
 
@@ -948,16 +990,16 @@ def cascade_update(
     coarse rollup watermark minus ``grace`` are re-aggregated from the
     fine tier; the cutoff is floored to the COARSE bucket grid so no
     partial bucket is ever rebuilt from a fine-row suffix.  Exactly
-    those rows are replaced via the backend's dynamic partition
-    overwrite (untouched partitions and older buckets keep their
-    rows), compressed chunk rows are re-derived for the affected
+    those rows are replaced in one since-bounded commit
+    (``_replace_tails``; untouched partitions and older buckets keep
+    their rows), compressed chunk rows are re-derived for the affected
     conversations only, and manifest rows land with the advanced
     watermark + ``new_snapshot`` lineage.  Partitions with no committed
     coarse rows get a full ``cascade_tier`` pass.
 
     Cost at scale: reads the fine tier's re-rollable tail (bucket_ts
-    predicate -> partition/file pruning on a time-partitioned tier),
-    rewrites only touched partitions — never the whole coarse table.
+    predicate -> row-group pruning on the footer statistics) and
+    writes only the coarse tier's tail — never the whole coarse table.
     """
     from tsaug_spark.plans.rollup import TIERS, reaggregate
 
@@ -1012,30 +1054,14 @@ def cascade_update(
         .cache()
     )
 
-    # single dynamic-partition-overwrite commit, FIRST action on
-    # `rolled` (materializes the cache inside the write — no separate
-    # pre-write stats job): every watermarked partition is synced to
-    # the fine tier's current tail — a partition whose re-roll came
-    # back EMPTY gets its stale tail cleared too, exactly what a full
+    # single tail-replace commit, FIRST action on `rolled`
+    # (materializes the cache inside the write — no separate pre-write
+    # stats job): every watermarked partition is synced to the fine
+    # tier's current tail — a partition whose re-roll came back EMPTY
+    # gets its stale tail cleared too, exactly what a full
     # re-aggregation would produce.  The replace set is driver-known
     # (the cutoff map), so no collect is needed to build it.
-    pids = sorted(cuts)
-    replace_df = self.spark.createDataFrame(
-        [(p, _epoch_ts(cuts[p])) for p in pids],
-        "partition_id int, cut_ts timestamp",
-    )
-    tier_table = self.table(f"tier_{coarse}")
-    kept = (
-        tier_table.read(self.spark)
-        .join(F.broadcast(replace_df), "partition_id")
-        .filter(F.col("bucket_ts") < F.col("cut_ts"))
-        .drop("cut_ts")
-    )
-    tier_table.overwrite_partitions(
-        kept.unionByName(rolled.select(*kept.columns)),
-        "partition_id",
-        partitions=pids,
-    )
+    self._replace_tails(f"tier_{coarse}", rolled, cuts)
     # bounds + counts from the already-materialized cache (cheap)
     stats_rows = (
         rolled.groupBy("partition_id")

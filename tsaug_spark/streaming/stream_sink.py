@@ -11,10 +11,10 @@ tables.  Each micro-batch commit is merge-by-bucket (replace rows whose
 (conv_id, bucket_ts) the batch re-emitted, keep the rest), so the
 caught-up table equals the batch rollup exactly — proven by test.
 
-Scale note: on Iceberg the merge is a MERGE INTO / dynamic-partition
-overwrite keyed on the bucket column; the parquet-snapshot fallback
-rewrites the table per batch, which is fine for the availableNow
-backfill shape it is used for here.
+Each merge is one since-bounded replace (``overwrite_partitions`` with
+``since`` = the batch's earliest bucket): on Iceberg a condition
+overwrite, on the parquet-snapshot table a commit that keeps every data
+file older than the batch by reference.
 """
 
 from __future__ import annotations
@@ -50,35 +50,32 @@ def merge_batch_into_tier(
         F.xxhash64("conv_id"), F.lit(job.n_partitions)
     ).cast("int")
     rows = batch_df.withColumn("partition_id", part_col).cache()
-    # ONE action materializes the cache and yields count + lineage
-    # bounds together (was a count job + a separate min/max job)
-    n, lo, wm = rows.agg(
+    # ONE action materializes the cache and yields count, lineage
+    # bounds and the touched partitions together
+    n, lo, wm, touched = rows.agg(
         F.count(F.lit(1)),
         F.min("bucket_ts"),
         F.max("bucket_ts"),
+        F.collect_set("partition_id"),
     ).collect()[0]
     if n == 0:
         rows.unpersist()
         return
     t = job.table(f"tier_{tier}")
     if t.exists():
-        # partition-scoped merge: only the conversation-bucket
-        # partitions the batch touches are rewritten (kept rows of
-        # those partitions minus re-emitted (conv_id, bucket_ts) keys,
-        # plus the batch rows), committed via the backend's dynamic
-        # partition overwrite — write amplification is O(touched
-        # partitions), not O(table).  On Iceberg this is
-        # overwritePartitions (a MERGE-shaped metadata commit).
-        touched = rows.select("partition_id").distinct()
+        # every re-emitted (conv_id, bucket_ts) key is at/after the
+        # batch's earliest bucket: replace the touched partitions' rows
+        # from there on with the batch rows plus the tail rows the
+        # batch did not re-emit
         keys = rows.select("conv_id", "bucket_ts")
-        kept = (
-            t.read(spark)
-            .join(touched, "partition_id", "left_semi")
-            .join(keys, ["conv_id", "bucket_ts"], "left_anti")
+        kept = t.read(spark, partitions=touched, since=lo).join(
+            keys, ["conv_id", "bucket_ts"], "left_anti"
         )
         t.overwrite_partitions(
             kept.unionByName(rows.select(*kept.columns)),
             "partition_id",
+            partitions=touched,
+            since=lo,
         )
     else:
         t.append(rows)
