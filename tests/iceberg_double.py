@@ -31,11 +31,15 @@ import json
 import os
 import shutil
 import uuid
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsaug_spark.sources.tables import replace_condition
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class InPlaceLazyTable:
@@ -117,7 +121,12 @@ class InPlaceLazyTable:
         os.replace(tmp, self._data)
         spark.catalog.refreshByPath(self._data)
 
-    def append(self, df: DataFrame) -> str:
+    def append(self, df: "DataFrame | pa.Table") -> str:
+        """Like ``IcebergTable.append``: a ``pyarrow.Table`` (the
+        manifest rows RollupJob commits) becomes a DataFrame through
+        ``createDataFrame``, an Arrow-built local relation."""
+        if not isinstance(df, DataFrame):
+            df = SparkSession.active().createDataFrame(df)
         os.makedirs(self.path, exist_ok=True)
         df.write.mode("append").parquet(self._data)
         df.sparkSession.catalog.refreshByPath(self._data)

@@ -8,15 +8,18 @@ WindowExec in every ``queries()`` plan must have an aggregate or a
 limit below it (tsaug_spark/plans/audit.py), with a per-query exemption
 list for any future deliberate exception (currently empty).
 
-Self-check: an injected ``Window.orderBy`` directly over the raw events
-scan must be flagged — proving the rule can fail.
+Self-checks: an injected ``Window.orderBy`` directly over the raw events
+scan must be flagged, as a JVM window and as a pandas window UDF —
+proving the rule can fail.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from tsaug_spark.plans.audit import unpartitioned_window_violations
 
@@ -51,6 +54,23 @@ def test_gate_flips_on_injected_unpartitioned_window(spark):
     )
     assert unpartitioned_window_violations(bad), (
         "the gate must flag an unpartitioned window over raw events"
+    )
+
+
+def test_gate_flags_unpartitioned_pandas_window_udf(spark):
+    """A pandas grouped-agg UDF over an unpartitioned window plans as
+    ArrowWindowPythonExec (Spark 4), not WindowExec: the gate must
+    flag it as well."""
+    @pandas_udf("double")
+    def mean_udf(v: pd.Series) -> float:
+        return float(v.mean())
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    bad = ev.withColumn(
+        "m", mean_udf(F.col("value")).over(Window.orderBy("ts"))
+    )
+    assert unpartitioned_window_violations(bad), (
+        "the gate must flag an unpartitioned pandas window UDF"
     )
 
 

@@ -7,8 +7,9 @@ only when the input frame is already bounded (a post-aggregate daily /
 hourly screen, or a top-k limit), never over raw event volume.  The
 repo's daily-series screens all sit on HashAggregate outputs bounded by
 the retention horizon; this rule makes that invariant CHECKED instead of
-by-convention: every unpartitioned WindowExec in a plan must have an
-aggregate or a limit somewhere below it in the same plan subtree.
+by-convention: every unpartitioned window node (WindowExec, or the
+pandas window UDF node) in a plan must have an aggregate or a limit
+somewhere below it in the same plan subtree.
 """
 
 from __future__ import annotations
@@ -32,9 +33,11 @@ _BOUNDING_MARKERS = (
     "StateStoreSaveExec",
 )
 
-_WINDOW_CLASSES = (
-    "org.apache.spark.sql.execution.window.WindowExec",
-    "org.apache.spark.sql.execution.window.WindowInPandasExec",
+#: window plan nodes, by simple class name: the JVM window, and the
+#: pandas window UDF node under its Spark 4 name (ArrowWindowPythonExec,
+#: in execution.python) and its Spark 3 name (WindowInPandasExec)
+_WINDOW_CLASSES = frozenset(
+    ("WindowExec", "ArrowWindowPythonExec", "WindowInPandasExec")
 )
 
 
@@ -60,7 +63,7 @@ def _subtree_has_bounding(tree: dict) -> bool:
 def _scan_windows(tree: dict, violations: list) -> None:
     node = tree["node"]
     cls = node.get("class", "")
-    if any(cls == w for w in _WINDOW_CLASSES):
+    if cls.rsplit(".", 1)[-1] in _WINDOW_CLASSES:
         part = node.get("partitionSpec", [])
         if not part and not any(
             _subtree_has_bounding(c) for c in tree["children"]

@@ -25,8 +25,17 @@ import time
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from tsaug_spark.lineage import truncate_lineage
 
@@ -40,12 +49,49 @@ from tsaug_spark.plans.rollup import (
 
 from .tables import ParquetSnapshotTable
 
-MANIFEST_SCHEMA = (
-    "tier string, partition_id int, source_snapshot string, "
-    "range_start_ts timestamp, watermark_ts timestamp, "
-    "points_rolled long, bytes_raw long, "
-    "bytes_compressed long, committed_at double"
-)
+MANIFEST_SCHEMA = StructType([
+    StructField("tier", StringType()),
+    StructField("partition_id", IntegerType()),
+    StructField("source_snapshot", StringType()),
+    StructField("range_start_ts", TimestampType()),
+    StructField("watermark_ts", TimestampType()),
+    StructField("points_rolled", LongType()),
+    StructField("bytes_raw", LongType()),
+    StructField("bytes_compressed", LongType()),
+    StructField("committed_at", DoubleType()),
+])
+
+
+def _manifest_table(rows: list):
+    """Manifest ``rows`` (tuples in ``MANIFEST_SCHEMA`` order) as a
+    ``pyarrow.Table`` holding exactly the values
+    ``createDataFrame(rows, MANIFEST_SCHEMA)`` would: each row goes
+    through ``MANIFEST_SCHEMA.toInternal`` (timestamps via
+    ``TimestampType.toInternal``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(MANIFEST_SCHEMA)
+    internal = [MANIFEST_SCHEMA.toInternal(r) for r in rows]
+    return pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in internal], f.type)
+            for i, f in enumerate(schema)
+        ],
+        schema=schema,
+    )
+
+
+def _cut_lookup(cuts: "dict[int, int]", key) -> Column:
+    """``cuts[key]`` (epoch seconds) as a timestamp: a literal map
+    lookup, NULL for a key not in ``cuts`` (a comparison with it drops
+    the row, as an inner join with a cutoff frame would)."""
+    return F.create_map(*[
+        x
+        for p, c in sorted(cuts.items())
+        for x in (F.lit(int(p)), F.timestamp_seconds(F.lit(int(c))))
+    ])[key]
+
 
 #: hypertable time-window per tier for the Gorilla chunk store —
 #: sized to ~365-1440 points per chunk.  Windowed chunks split on
@@ -114,7 +160,8 @@ class RollupJob:
     # overwrite/overwrite_partitions/snapshot_id/exists) constructed
     # from a path-like identifier — ParquetSnapshotTable in-sandbox,
     # IcebergTable on a cluster (tests/test_checkpoint.py parametrizes
-    # the contract over both semantics)
+    # the contract over both semantics).  ``append`` must take a
+    # pyarrow.Table as well as a DataFrame: manifest commits pass one.
     table_cls: type = ParquetSnapshotTable
     _tables: dict = field(default_factory=dict)
 
@@ -431,21 +478,15 @@ class RollupJob:
         """Replace, in one commit, each partition ``p``'s rows with
         ``bucket_ts >= cuts[p]`` (epoch seconds) by its rows of
         ``rolled``.  The commit is bounded by the earliest cut: the
-        backend replaces only rows at/after it, so the kept rows between
-        it and each later cut ride along, and every earlier data file
+        backend replaces only rows at/after it, so each partition's rows
+        between it and the partition's own cut (a literal map lookup of
+        ``cuts``) are kept and ride along, and every earlier data file
         stays as it is."""
         pids = sorted(cuts)
         since = _epoch_ts(min(cuts.values()))
-        replace_df = self.spark.createDataFrame(
-            [(p, _epoch_ts(cuts[p])) for p in pids],
-            "partition_id int, cut_ts timestamp",
-        )
         t = self.table(name)
-        kept = (
-            t.read(self.spark, partitions=pids, since=since)
-            .join(F.broadcast(replace_df), "partition_id")
-            .filter(F.col("bucket_ts") < F.col("cut_ts"))
-            .drop("cut_ts")
+        kept = t.read(self.spark, partitions=pids, since=since).filter(
+            F.col("bucket_ts") < _cut_lookup(cuts, F.col("partition_id"))
         )
         t.overwrite_partitions(
             kept.unionByName(rolled.select(*kept.columns)),
@@ -634,10 +675,10 @@ class RollupJob:
     def _append_manifest(self, rows: list) -> None:
         """Append manifest rows AND keep the watermark cache in sync —
         every commit site routes through here so the cache can never
-        miss a watermark this job itself advanced."""
-        self.manifest.append(
-            self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
-        )
+        miss a watermark this job itself advanced.  The rows go to the
+        table as a pyarrow.Table: the snapshot table writes them on the
+        driver, with no Spark job."""
+        self.manifest.append(_manifest_table(rows))
         cache = self.__dict__.get("_wm_map")
         if cache is not None:
             for r in rows:
@@ -719,21 +760,11 @@ class RollupJob:
         # literal min-cutoff prefilter reaches the parquet scan
         # (PushedFilters / partition pruning on a ts-partitioned
         # table), then each row keeps only if at/after ITS partition's
-        # aligned (watermark - grace)
+        # aligned (watermark - grace), a literal map lookup
         min_cut = min(cuts.values())
-        cut_df = self.spark.createDataFrame(
-            [(p, _epoch_ts(c)) for p, c in cuts.items()],
-            "partition_id int, cut_ts timestamp",
-        )
-        src = (
-            transcripts.filter(
-                F.col("ts") >= F.timestamp_seconds(F.lit(min_cut))
-            )
-            .withColumn("partition_id", part_col)
-            .join(F.broadcast(cut_df), "partition_id")
-            .filter(F.col("ts") >= F.col("cut_ts"))
-            .drop("partition_id", "cut_ts")
-        )
+        src = transcripts.filter(
+            F.col("ts") >= F.timestamp_seconds(F.lit(min_cut))
+        ).filter(F.col("ts") >= _cut_lookup(cuts, part_col))
         rolled = (
             rollup_transcripts(src, tier)
             .withColumn("partition_id", part_col)
@@ -829,19 +860,17 @@ def enforce_retention(
         dur = keep.get(tier)
         if dur is None:
             continue
+        # the minimum over partitions of each one's max watermark, from
+        # the driver-side cache (no manifest job)
         anchor = None
-        for coarser in TIER_ORDER[i + 1:]:
-            wm = self.watermarks(coarser).agg(
-                F.min("watermark_ts")
-            ).collect()[0][0]
-            if wm is not None:
-                anchor = wm
+        for t in TIER_ORDER[i + 1:] + [tier]:
+            wms = [
+                wm for wm in self._tier_watermarks(t).values()
+                if wm is not None
+            ]
+            if wms:
+                anchor = min(wms)
                 break
-        if anchor is None:
-            wm = self.watermarks(tier).agg(
-                F.min("watermark_ts")
-            ).collect()[0][0]
-            anchor = wm
         if anchor is None:
             continue  # tier never rolled up — nothing to expire
         cutoff = F.lit(anchor) - F.expr(f"INTERVAL {dur}")
@@ -1034,19 +1063,16 @@ def cascade_update(
         for p, wm in cutoffs.items()
     }
     min_cut = min(cuts.values())
-    cut_df = self.spark.createDataFrame(
-        [(p, _epoch_ts(c)) for p, c in cuts.items()],
-        "partition_id int, cut_ts timestamp",
-    )
 
     fine_df = self.table(f"tier_{fine}").read(self.spark)
     src = (
         fine_df.filter(
             F.col("bucket_ts") >= F.timestamp_seconds(F.lit(min_cut))
         )
-        .join(F.broadcast(cut_df), "partition_id")
-        .filter(F.col("bucket_ts") >= F.col("cut_ts"))
-        .drop("partition_id", "cut_ts")
+        .filter(
+            F.col("bucket_ts") >= _cut_lookup(cuts, F.col("partition_id"))
+        )
+        .drop("partition_id")
     )
     rolled = (
         reaggregate(src, fine, coarse)

@@ -9,6 +9,13 @@ Both formats expose the same operations the engine needs:
                                   -> atomically advance the snapshot
 * ``snapshot_id()``               -> lineage token recorded in checkpoints
 
+``append`` accepts a DataFrame or a ``pyarrow.Table``.  The latter holds
+rows the driver already has (the checkpoint manifest's lineage rows):
+``ParquetSnapshotTable`` writes it on the driver with pyarrow, no Spark
+job and no Python worker; ``IcebergTable`` converts it with
+``createDataFrame``, which Spark turns into a local relation through
+Arrow, not a pickled Python RDD.
+
 ``ParquetSnapshotTable`` implements snapshot isolation the way Iceberg's
 metadata layer does, scaled down: a snapshot is a JSON list of immutable
 parquet data files plus the table schema.  A commit writes only its new
@@ -29,12 +36,17 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from tsaug_spark.lineage import truncate_lineage
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 #: the time axis that ``since`` bounds in ``overwrite_partitions``/``read``
 TIME_COL = "bucket_ts"
@@ -152,7 +164,8 @@ class ParquetSnapshotTable:
 
     * ``read``: a table scan; with ``partitions``/``since``, a filtered
       scan that plans only the files whose stats can match;
-    * ``append``: ``AppendFiles`` (``INSERT INTO``);
+    * ``append``: ``AppendFiles`` (``INSERT INTO``); a DataFrame is
+      written by a Spark job, a ``pyarrow.Table`` on the driver;
     * ``overwrite``: a full replace (``INSERT OVERWRITE`` of an
       unpartitioned table);
     * ``overwrite_partitions``: ``OverwriteFiles`` by row filter
@@ -173,7 +186,8 @@ class ParquetSnapshotTable:
     admits the key; parquet-mr skips the bloom and keeps the exact
     dictionary filter when a chunk stays fully dictionary-encoded, so
     the option is safe to leave on).  ``bloom_ndv`` sizes the filter
-    (bits ~= 10 x ndv at the default 1% fpp).
+    (bits ~= 10 x ndv at the default 1% fpp).  pyarrow has no bloom
+    writer, so such a table refuses a ``pyarrow.Table`` append.
     """
 
     path: str
@@ -236,14 +250,12 @@ class ParquetSnapshotTable:
     ) -> DataFrame:
         """Exactly ``files`` (default: all of ``meta``'s) under the
         snapshot's stored schema: no schema-inference job, and no
-        listing job at any file count."""
+        listing job at any file count.  No file gives an empty scan."""
         schema = StructType.fromJson(meta["schema"])
         paths = [
             os.path.join(self.path, f["path"])
             for f in (meta["files"] if files is None else files)
         ]
-        if not paths:
-            return spark.createDataFrame([], schema)
         # Spark lists the named paths while it creates the DataFrame, in
         # a Spark job once there are more of them than the parallel-
         # discovery threshold (32).  Lift it for this read only: other
@@ -292,41 +304,48 @@ class ParquetSnapshotTable:
 
     def _commit(
         self,
-        df: DataFrame,
+        data: "DataFrame | pa.Table",
         parent: "dict | None",
         kept: "list[dict] | None" = None,
     ) -> str:
-        """Write ``df`` as new data files and publish the snapshot that
-        lists them after ``kept``.  ``kept=None`` replaces the table,
-        schema included.  Otherwise the parent's schema stays: ``df``'s
+        """Write ``data`` as new data files and publish the snapshot that
+        lists them after ``kept``.  A DataFrame is written by a Spark
+        job, a ``pyarrow.Table`` by pyarrow on the driver; both end in
+        the same publish step.  ``kept=None`` replaces the table, schema
+        included.  Otherwise the parent's schema stays: ``data``'s
         shared columns are cast to it and new columns are added, which
         older files read as NULL (schema evolution)."""
         snap = f"{int(time.time() * 1000):013d}-{uuid.uuid4().hex[:8]}"
-        schema = df.schema
+        is_df = isinstance(data, DataFrame)
+        have = data.schema if is_df else from_arrow_schema(data.schema)
+        write = schema = have
         if kept is not None and parent is not None:
             stored = StructType.fromJson(parent["schema"])
-            have = {f.name: f.dataType for f in stored}
-            if any(have.get(f.name, f.dataType) != f.dataType
-                   for f in df.schema):
-                df = df.select(*[
-                    F.col(f.name).cast(have.get(f.name, f.dataType))
-                    for f in df.schema
-                ])
+            types = {f.name: f.dataType for f in stored}
+            write = StructType([
+                StructField(
+                    f.name, types.get(f.name, f.dataType), f.nullable,
+                    f.metadata,
+                )
+                for f in have
+            ])
             schema = StructType(
-                list(stored) + [f for f in schema if f.name not in have]
+                list(stored) + [f for f in have if f.name not in types]
             )
         rel = os.path.join("data", snap)
-        writer = df.write.mode("errorifexists")
-        for c in self.bloom_cols:
-            writer = writer.option(
-                f"parquet.bloom.filter.enabled#{c}", "true"
-            ).option(
-                f"parquet.bloom.filter.expected.ndv#{c}",
-                str(self.bloom_ndv),
-            )
-        writer.parquet(os.path.join(self.path, rel))
+        out = os.path.join(self.path, rel)
+        if is_df:
+            if write != have:
+                data = data.select(
+                    *[F.col(f.name).cast(f.dataType) for f in write]
+                )
+            self._write_spark(data, out)
+        else:
+            if write != have:
+                data = data.cast(to_arrow_schema(write))
+            self._write_arrow(data, out)
         added = []
-        for n in sorted(os.listdir(os.path.join(self.path, rel))):
+        for n in sorted(os.listdir(out)):
             if n.endswith(".parquet"):
                 entry = _file_entry(self.path, os.path.join(rel, n))
                 if entry["rows"]:
@@ -353,6 +372,33 @@ class ParquetSnapshotTable:
         self._persist(meta)
         return snap
 
+    def _write_spark(self, df: DataFrame, out: str) -> None:
+        """Write ``df`` into ``out`` with a Spark job."""
+        writer = df.write.mode("errorifexists")
+        for c in self.bloom_cols:
+            writer = writer.option(
+                f"parquet.bloom.filter.enabled#{c}", "true"
+            ).option(
+                f"parquet.bloom.filter.expected.ndv#{c}",
+                str(self.bloom_ndv),
+            )
+        writer.parquet(out)
+
+    def _write_arrow(self, table: "pa.Table", out: str) -> None:
+        """Write ``table`` into ``out`` as one parquet file, on the
+        driver: no Spark job."""
+        import pyarrow.parquet as pq
+
+        if self.bloom_cols:
+            raise ValueError(
+                f"{self.path} writes bloom filters on {self.bloom_cols}, "
+                "which pyarrow cannot: append a DataFrame"
+            )
+        os.makedirs(out)
+        pq.write_table(
+            table, os.path.join(out, f"part-00000-{uuid.uuid4()}.parquet")
+        )
+
     def _persist(self, meta: "dict | None") -> None:
         """Write ``meta/<snapshot>.json`` for a committed snapshot that
         has none yet."""
@@ -363,11 +409,13 @@ class ParquetSnapshotTable:
             os.makedirs(self._meta_dir, exist_ok=True)
             _write_json(path, meta)
 
-    def append(self, df: DataFrame) -> str:
-        """Add ``df``'s rows as new files; no existing file is read or
-        rewritten.  New columns evolve the schema."""
+    def append(self, data: "DataFrame | pa.Table") -> str:
+        """Add ``data``'s rows as new files; no existing file is read or
+        rewritten.  A DataFrame is written by a Spark job; a
+        ``pyarrow.Table`` is written on the driver, with no Spark job.
+        New columns evolve the schema."""
         meta = self._resolve()
-        return self._commit(df, meta, meta["files"] if meta else None)
+        return self._commit(data, meta, meta["files"] if meta else None)
 
     def overwrite(self, df: DataFrame) -> str:
         """Replace the whole table, schema included, with ``df``."""
@@ -664,8 +712,13 @@ class IcebergTable:
             "compacted": bool(d.get("rewritten_data_files_count")),
         }
 
-    def append(self, df: DataFrame) -> str | None:
-        df.writeTo(self.identifier).append()
+    def append(self, data: "DataFrame | pa.Table") -> str | None:
+        """``INSERT INTO``.  A ``pyarrow.Table`` becomes a DataFrame
+        through ``createDataFrame``: a local relation built with Arrow,
+        no Python worker."""
+        if not isinstance(data, DataFrame):
+            data = SparkSession.active().createDataFrame(data)
+        data.writeTo(self.identifier).append()
         return self.snapshot_id()
 
     def overwrite(self, df: DataFrame) -> str | None:
