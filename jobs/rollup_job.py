@@ -31,7 +31,13 @@ def main() -> None:
     ap.add_argument("--tiers", default="1m,1h,1d")
     ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--snapshot", default=None)
-    ap.add_argument("--no-resume", action="store_true")
+    ap.add_argument(
+        "--no-resume",
+        action="store_true",
+        help="rebuild every partition, even those the manifest records "
+        "as done for this snapshot; a re-run replaces each partition's "
+        "rows rather than appending them",
+    )
     ap.add_argument(
         "--update",
         action="store_true",

@@ -64,14 +64,6 @@ def _assemble(tokens: np.ndarray, nbits: np.ndarray) -> np.ndarray:
     return bitmat[src]
 
 
-def _read_bits(bits: np.ndarray, pos: int, n: int) -> int:
-    """Read n bits MSB-first from position pos as a Python int."""
-    out = 0
-    for b in bits[pos : pos + n]:
-        out = (out << 1) | int(b)
-    return out
-
-
 # ------------------------------------------------------------------ values
 def encode_values(values: np.ndarray) -> bytes:
     """Gorilla-XOR encode a float64 array into a self-describing chunk."""

@@ -30,21 +30,3 @@ def char_entropy(texts: pd.Series) -> pd.Series:
         return float(-(p * np.log2(p)).sum())
 
     return texts.map(one)
-
-
-@pandas_udf("double")
-def gini_concentration(values: pd.Series) -> pd.Series:
-    """Per-row Gini coefficient of an array<double> column — used to
-    score how concentrated a conversation's activity is across buckets."""
-
-    def one(arr) -> float:
-        if arr is None or len(arr) == 0:
-            return 0.0
-        v = np.sort(np.asarray(arr, dtype=np.float64))
-        if v.sum() == 0:
-            return 0.0
-        n = len(v)
-        index = np.arange(1, n + 1)
-        return float((2 * index - n - 1).dot(v) / (n * v.sum()))
-
-    return values.map(one)

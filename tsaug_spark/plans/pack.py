@@ -35,7 +35,7 @@ see SURVEY.md §7.4 R6.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence, Tuple
+from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -47,30 +47,6 @@ from tsaug_spark.operators.base import expand_int_spec
 from tsaug_spark.operators.resize import resize_batch
 
 from .rng_plan import ScriptedRNG, plan_operator, subseed_for
-
-
-def pack_batch(
-    df_long: DataFrame, value_cols: Sequence[str], idx_col: str = "bucket_idx"
-) -> Tuple[np.ndarray, List[str]]:
-    """Collect a long tier DataFrame into a local (N, T, C) batch.
-
-    Series are ordered by conv_id (ascending) — the canonical batch order
-    the RNG planner assumes.  Test/driver helper; never used by the
-    distributed path.
-    """
-    pdf = df_long.select("conv_id", idx_col, *value_cols).toPandas()
-    convs = sorted(pdf["conv_id"].unique())
-    mats = []
-    for cid in convs:
-        part = pdf[pdf["conv_id"] == cid].sort_values(idx_col)
-        mats.append(part[list(value_cols)].to_numpy(dtype=np.float64))
-    lengths = {m.shape[0] for m in mats}
-    if len(lengths) != 1:
-        raise ValueError(
-            f"series lengths differ ({sorted(lengths)[:5]}...) — gap-fill "
-            "onto a common grid first"
-        )
-    return np.stack(mats), convs
 
 
 def _resize_mask(y: np.ndarray, size: int) -> np.ndarray:

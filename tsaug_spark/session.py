@@ -72,10 +72,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    """Tear down the active session (used between bench parallelism runs)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

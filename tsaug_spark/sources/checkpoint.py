@@ -1,17 +1,22 @@
 """Resumable rollup jobs: per-partition checkpoints with lineage + metrics.
 
 Work is split into ``n_partitions`` deterministic conversation buckets
-(``pmod(xxhash64(conv_id), P)``) so a partition is a self-contained unit:
-every bucket of a conversation lands in exactly one partition, and a
-partition can be rolled up, compressed, committed, and checkpointed
-independently.  The checkpoint manifest carries per-partition **lineage**
-(source snapshot id, partition id, rollup watermark) and **metrics**
-(points_rolled, bytes_raw, bytes_compressed) per the north rule.
+(``pmod(xxhash64(conv_id), P)``, ``RollupJob._partition_col``) so a
+partition is a self-contained unit: every bucket of a conversation
+lands in exactly one partition, and a partition can be rolled up,
+compressed, committed, and checkpointed independently.  The checkpoint
+manifest carries per-partition **lineage** (source snapshot id,
+partition id, rollup watermark) and **metrics** (points_rolled,
+bytes_raw, bytes_compressed) per the north rule.
 
-Resume = anti-join of the partition list against the manifest: partitions
-with a committed manifest row for (tier, source snapshot) are skipped, so
-a killed job continues where it stopped and the final table equals the
-single-shot run (tests/test_checkpoint.py proves this).
+Every tier build (``run``, ``cascade_tier``, ``op_downsample_tier``)
+REPLACES each partition it builds: tier rows, then chunk rows, then the
+manifest row, which lands last.  Resume = anti-join of the partition
+list against the manifest: partitions with a committed manifest row for
+(tier, source snapshot) are skipped, and a partition a crash left
+without one is rebuilt over whatever it committed, so a killed job
+continues where it stopped and the final table equals the single-shot
+run (tests/test_checkpoint.py proves this).
 
 Late data: each partition records ``watermark_ts`` = max bucket rolled.
 ``update()`` re-rolls only buckets >= the stored watermark minus a grace
@@ -44,6 +49,7 @@ from tsaug_spark.plans.rollup import (
     METRIC_COLS,
     TIER_ORDER,
     TIERS,
+    reaggregate,
     rollup_transcripts,
 )
 
@@ -148,6 +154,12 @@ def _epoch_ts(epoch: int):
     return _dt.datetime.utcfromtimestamp(epoch)
 
 
+def _expiry_tier(tier: str) -> str:
+    """Manifest tier label for expiry commits (distinct from rollup
+    rows so ``watermarks()`` never sees them)."""
+    return f"{tier}#expired"
+
+
 @dataclass
 class RollupJob:
     """Checkpoint-resumable rollup of a transcript table into tier tables."""
@@ -196,7 +208,95 @@ class RollupJob:
         df = self.manifest.read(self.spark)
         return df.filter(F.col("tier") == tier) if tier else df
 
-    # --------------------------------------------------------------- run
+    def _partition_col(self) -> Column:
+        """Each row's conversation-bucket partition:
+        ``pmod(xxhash64(conv_id), P)`` as an int."""
+        return F.pmod(
+            F.xxhash64("conv_id"), F.lit(self.n_partitions)
+        ).cast("int")
+
+    def _manifest_row(
+        self, tier, p, lo, wm, points, raw=0, comp=0, snapshot=None
+    ) -> tuple:
+        """One manifest row, in ``MANIFEST_SCHEMA`` order."""
+        return (
+            tier,
+            p,
+            snapshot or self.source_snapshot,
+            lo,
+            wm,
+            int(points),
+            int(raw),
+            int(comp),
+            time.time(),
+        )
+
+    # ------------------------------------------------------------ builds
+    def _pending(
+        self, tier: str, partitions: "Optional[Sequence[int]]", resume: bool
+    ) -> list:
+        """``partitions`` (default: all), less those the manifest already
+        records for (``tier``, source snapshot) when resuming."""
+        todo = list(
+            partitions if partitions is not None else range(self.n_partitions)
+        )
+        if resume:
+            done = self.completed_partitions(tier)
+            todo = [p for p in todo if p not in done]
+        return todo
+
+    def _commit_partition(
+        self, tier: str, p: int, row: tuple, rows: DataFrame, chunks=None
+    ) -> None:
+        """Commit partition ``p`` of ``tier``: replace its tier rows,
+        then its chunk rows (if any), then append its manifest ``row``.
+        The manifest row lands last, so a crash before it leaves ``p``
+        pending, and the rebuild replaces what the crashed one
+        committed."""
+        self._replace_partition(f"tier_{tier}", p, rows)
+        if chunks is not None:
+            self._replace_partition(f"tier_{tier}_chunks", p, chunks)
+        self._append_manifest([row])
+
+    def _build_partitions(
+        self, tier: str, todo: list, roll, ranged: bool = False
+    ) -> int:
+        """Build each partition in ``todo`` of ``tier``: ``roll(p)``
+        makes its rolled rows, which are chunk-encoded, measured and
+        committed.  ``ranged`` writes the tier rows as time-clustered
+        files (``repartitionByRange`` on bucket_ts): each covers a
+        narrow time band, so the since-bounded replaces of
+        update/cascade_update keep the earlier files by reference."""
+        for p in todo:
+            rolled = roll(p).cache()
+            chunks = compress_tier(
+                rolled, METRIC_COLS, window_s=_chunk_window(tier)
+            ).cache()
+            stats = chunks.agg(
+                F.coalesce(F.sum("n_points"), F.lit(0)).alias("points"),
+                F.coalesce(F.sum("bytes_raw"), F.lit(0)).alias("raw"),
+                F.coalesce(F.sum("bytes_compressed"), F.lit(0)).alias("comp"),
+            ).collect()[0]
+            lo, wm = rolled.agg(
+                F.min("bucket_ts"), F.max("bucket_ts")
+            ).collect()[0]
+            rows = rolled.withColumn("partition_id", F.lit(p))
+            if ranged:
+                rows = rows.repartitionByRange(8, "bucket_ts")
+            self._commit_partition(
+                tier,
+                p,
+                self._manifest_row(
+                    tier, p, lo, wm,
+                    stats["points"], stats["raw"], stats["comp"],
+                ),
+                rows,
+                chunks.withColumn("partition_id", F.lit(p)),
+            )
+            rolled.unpersist()
+            chunks.unpersist()
+        return len(todo)
+
     def run(
         self,
         transcripts: DataFrame,
@@ -206,66 +306,153 @@ class RollupJob:
     ) -> int:
         """Roll up pending partitions; returns how many were processed.
 
-        Each partition commit is: append tier rows + compressed chunk rows,
-        then append the manifest row.  The manifest row is written last, so
-        a crash between the two leaves a re-doable (not lost) partition;
-        tier reads dedupe on (conv_id, bucket_ts) latest-commit-wins via
-        the snapshot parent chain.
+        Each partition commit replaces the partition's tier rows, then
+        its compressed chunk rows, then appends the manifest row.  The
+        manifest row is written last, so a crash before it leaves a
+        re-doable (not lost) partition.  A resumed run, a re-run under
+        a new ``source_snapshot`` and ``resume=False`` all REPLACE what
+        an earlier run committed for a partition, so the tier never
+        holds a partition twice and reads need no dedupe.
         """
-        todo = list(partitions if partitions is not None else range(self.n_partitions))
-        if resume:
-            done = self.completed_partitions(tier)
-            todo = [p for p in todo if p not in done]
+        part = self._partition_col()
+        return self._build_partitions(
+            tier,
+            self._pending(tier, partitions, resume),
+            lambda p: rollup_transcripts(transcripts.filter(part == p), tier),
+            ranged=True,
+        )
 
-        part_col = F.pmod(F.xxhash64("conv_id"), F.lit(self.n_partitions))
+    def cascade_tier(
+        self,
+        fine: str,
+        coarse: str,
+        resume: bool = True,
+        partitions: "Optional[Sequence[int]]" = None,
+    ) -> int:
+        """Continuous-aggregate maintenance of ``coarse`` FROM ``fine``,
+        with the same per-partition checkpoint/lineage/metrics contract
+        as ``run`` — every tier in the cascade is resumable and
+        manifest-tracked, not just the first.  Reads only the fine tier
+        (never the raw table), so the cascade cost is proportional to
+        tier size.
+
+        Re-running under a NEW source snapshot (the late-data workflow)
+        REPLACES each partition's coarse rows rather than appending —
+        otherwise every re-run would stack duplicate buckets into the
+        coarse tier.  On Iceberg this is a condition overwrite; the
+        parquet-snapshot table keeps other partitions' files by
+        reference.
+        """
+        fine_df = self.table(f"tier_{fine}").read(self.spark)
+        return self._build_partitions(
+            coarse,
+            self._pending(coarse, partitions, resume),
+            lambda p: reaggregate(
+                fine_df.filter(F.col("partition_id") == p).drop(
+                    "partition_id"
+                ),
+                fine,
+                coarse,
+            ),
+        )
+
+    def op_downsample_tier(
+        self,
+        fine: str,
+        out_name: str,
+        op,
+        value_cols: "Sequence[str]" = METRIC_COLS,
+        min_len: int = 1,
+        resume: bool = True,
+        partitions: "Optional[Sequence[int]]" = None,
+    ) -> int:
+        """Operator-downsampled tier: run a tsaug series operator (Pool /
+        Resize / Convolve / Quantize — the reference's downsampler set) as
+        the fine→coarse transform over each conversation's tier series,
+        under the SAME per-partition checkpoint / lineage / metrics
+        contract as ``cascade_tier``.
+
+        This is the north-star wiring: the continuous-aggregate cascade's
+        downsampler is a pandas-on-Arrow reimplementation of the reference
+        operator, not just an algebraic re-aggregate — e.g. ``Pool('ave',
+        4)`` over the 1h tier produces a mean-pooled 4h tier, and
+        ``Convolve`` a smoothed tier.  Each conversation's series is
+        indexed in ``bucket_ts`` order and fed to the distributed kernel
+        (``plans/pack.py::apply_operator``, subseed mode — zero driver
+        state); the output tier is keyed (conv_id, bucket_idx) in operator
+        index space, with the manifest row carrying the SOURCE time range
+        [lo, watermark] and points-rolled metrics for lineage.  Re-running
+        under a new source snapshot replaces each partition (same
+        late-data semantics as ``cascade_tier``).  Chunk compression is
+        not applied to operator tiers (operator output is not
+        timestamp-gridded; the algebraic tiers remain the compressed
+        store).
+
+        ``min_len`` excludes conversations with fewer fine buckets than
+        the operator can consume (the reference's own Pool/Resize raise on
+        sub-block series — parity-preserved here), e.g. ``min_len=size``
+        for Pool; excluded conversations simply have no rows in the
+        operator tier, the same contract as a HAVING clause.
+        """
+        from tsaug_spark.plans.pack import apply_operator
+
+        if getattr(op, "repeats", 1) != 1:
+            raise ValueError(
+                "op_downsample_tier writes (conv_id, bucket_idx)-keyed "
+                "tier rows; repeats > 1 would collapse the rep_idx axis "
+                "into duplicate keys — run augmentation via apply_pipe "
+                "instead"
+            )
+        value_cols = list(value_cols)
+        fine_df = self.table(f"tier_{fine}").read(self.spark)
+        todo = self._pending(out_name, partitions, resume)
+
+        w = Window.partitionBy("conv_id").orderBy("bucket_ts")
         for p in todo:
-            src = transcripts.filter(part_col == p)
-            rolled = rollup_transcripts(src, tier).cache()
-            chunks = compress_tier(
-                rolled, METRIC_COLS, window_s=_chunk_window(tier)
-            ).cache()
-            stats = chunks.agg(
-                F.coalesce(F.sum("n_points"), F.lit(0)).alias("points"),
-                F.coalesce(F.sum("bytes_raw"), F.lit(0)).alias("raw"),
-                F.coalesce(F.sum("bytes_compressed"), F.lit(0)).alias("comp"),
-                F.max(F.lit(None).cast("timestamp")).alias("_"),
-            ).collect()[0]
-            lo, wm = rolled.agg(
+            src = fine_df.filter(F.col("partition_id") == p).drop(
+                "partition_id"
+            )
+            cw = Window.partitionBy("conv_id")
+            series = (
+                src.select(
+                    "conv_id",
+                    (F.row_number().over(w) - 1).alias("bucket_idx"),
+                    "bucket_ts",
+                    F.count(F.lit(1)).over(cw).alias("_T"),
+                    *[F.col(c).cast("double").alias(c) for c in value_cols],
+                )
+                .filter(F.col("_T") >= min_len)
+                .drop("_T")
+                .cache()
+            )
+            out = apply_operator(
+                series.drop("bucket_ts"), op, value_cols, mode="subseed"
+            ).drop("rep_idx").cache()
+            n_rows = out.count()
+            lo, wm = src.agg(
                 F.min("bucket_ts"), F.max("bucket_ts")
             ).collect()[0]
-
-            # time-clustered tier files (repartitionByRange on
-            # bucket_ts): each covers a narrow time band, so the
-            # since-bounded replaces of update/cascade_update keep the
-            # earlier files by reference
-            self.table(f"tier_{tier}").append(
-                rolled.withColumn("partition_id", F.lit(p))
-                .repartitionByRange(8, "bucket_ts")
+            self._commit_partition(
+                out_name,
+                p,
+                self._manifest_row(
+                    out_name, p, lo, wm, n_rows * len(value_cols)
+                ),
+                out.withColumn("partition_id", F.lit(p)),
             )
-            self.table(f"tier_{tier}_chunks").append(
-                chunks.withColumn("partition_id", F.lit(p))
-            )
-            self._append_manifest(
-                [
-                    (
-                        tier,
-                        p,
-                        self.source_snapshot,
-                        lo,
-                        wm,
-                        int(stats["points"]),
-                        int(stats["raw"]),
-                        int(stats["comp"]),
-                        time.time(),
-                    )
-                ]
-            )
-            rolled.unpersist()
-            chunks.unpersist()
+            series.unpersist()
+            out.unpersist()
         return len(todo)
 
     def read_tier(self, tier: str) -> DataFrame:
         return self.table(f"tier_{tier}").read(self.spark).drop("partition_id")
+
+    def _table_names(self, tiers: "list[str] | None") -> "list[str]":
+        """The manifest, then each tier's table and chunk table
+        (default: every tier)."""
+        return ["_manifest"] + [
+            f"tier_{t}{s}" for t in tiers or TIERS for s in ("", "_chunks")
+        ]
 
     def expire_table_snapshots(
         self, keep_last: int = 3, tiers: "list[str] | None" = None
@@ -279,13 +466,8 @@ class RollupJob:
         current snapshot is always retained.  Backends without snapshot
         GC (Iceberg handles it via its own expire_snapshots procedure)
         are skipped."""
-        from tsaug_spark.plans.rollup import TIERS
-
-        names = ["_manifest"]
-        for t in tiers or list(TIERS):
-            names += [f"tier_{t}", f"tier_{t}_chunks"]
         out: dict[str, list[str]] = {}
-        for n in names:
+        for n in self._table_names(tiers):
             tbl = self.table(n)
             if tbl.exists() and hasattr(tbl, "expire_snapshots"):
                 expired = tbl.expire_snapshots(keep_last=keep_last)
@@ -334,11 +516,8 @@ class RollupJob:
             # a safe literal pre-filter (pushes into the scan); with
             # uncommitted partitions their full history must stay
             tail_src = tail_src.filter(F.col("ts") >= F.lit(min_wm))
-        part_col = F.pmod(
-            F.xxhash64("conv_id"), F.lit(self.n_partitions)
-        )
         tail_src = (
-            tail_src.withColumn("partition_id", part_col)
+            tail_src.withColumn("partition_id", self._partition_col())
             .join(F.broadcast(wm), "partition_id", "left")
             .filter(
                 F.col("watermark_ts").isNull()
@@ -439,13 +618,8 @@ class RollupJob:
         Pure rewrite: row content unchanged, previous snapshot stays
         time-travelable.  Only tables that actually compacted are
         reported."""
-        from tsaug_spark.plans.rollup import TIERS
-
-        names = ["_manifest"]
-        for t in tiers or list(TIERS):
-            names += [f"tier_{t}", f"tier_{t}_chunks"]
         out: dict[str, dict] = {}
-        for n in names:
+        for n in self._table_names(tiers):
             tbl = self.table(n)
             if tbl.exists() and hasattr(tbl, "compact"):
                 res = tbl.compact(self.spark, target_file_mb)
@@ -548,9 +722,7 @@ class RollupJob:
         affected = affected.transform(
             lambda d: truncate_lineage(d, eager=False)
         )
-        part_col = F.pmod(
-            F.xxhash64("conv_id"), F.lit(self.n_partitions)
-        ).cast("int")
+        part_col = self._partition_col()
         if pids is None:
             pids = [
                 r[0]
@@ -689,6 +861,109 @@ class RollupJob:
                 ):
                     cache[key] = wm
 
+    def _refresh_tails(
+        self,
+        tier: str,
+        grace: str,
+        new_snapshot: Optional[str],
+        source: DataFrame,
+        time_col: str,
+        roll,
+        full_build,
+        clear_all: bool,
+    ) -> int:
+        """The tail refresh behind ``update`` and ``cascade_update``.
+
+        ``source`` holds the rows to re-roll (with a ``partition_id``
+        column), ``time_col`` their time, and ``roll`` turns its tail
+        into ``tier`` rows.  Partitions with no committed watermark go
+        through ``full_build(partitions)`` (``None`` = all of them).
+        ``clear_all`` replaces the tail of every watermarked partition,
+        so one whose re-roll came back empty loses its stale tail;
+        otherwise only partitions the re-roll returned rows for are
+        replaced.  Returns how many partitions were touched."""
+        # a NULL watermark = a committed-but-empty partition: it goes
+        # through full_build like a partition with no manifest row
+        wms = {
+            p: wm
+            for p, wm in self._tier_watermarks(tier).items()
+            if wm is not None
+        }
+        if not wms:
+            return full_build(None)
+        # floor the cutoff to the tier bucket grid: a grace that is not
+        # a multiple of the bucket width would otherwise KEEP the old
+        # full-bucket row (bucket_ts < cut) while the re-roll emits a
+        # partial aggregate for the SAME bucket from rows >= cut — two
+        # conflicting rows per (conv, bucket).  Cutoffs are computed
+        # DRIVER-SIDE from the cached watermarks so the global minimum
+        # is a LITERAL the source scan can prune on.
+        width = TIERS[tier][1]
+        g = _grace_seconds(grace)
+        cuts = {
+            p: (_ts_epoch(wm) - g) // width * width for p, wm in wms.items()
+        }
+        missing = [p for p in range(self.n_partitions) if p not in cuts]
+        touched = full_build(missing) if missing else 0
+
+        # one pass over every watermarked partition: the literal
+        # min-cutoff prefilter reaches the scan (PushedFilters,
+        # partition or row-group pruning), then each row is kept only
+        # if at/after ITS partition's cutoff, a literal map lookup
+        min_cut = min(cuts.values())
+        src = (
+            source.filter(
+                F.col(time_col) >= F.timestamp_seconds(F.lit(min_cut))
+            )
+            .filter(
+                F.col(time_col)
+                >= _cut_lookup(cuts, F.col("partition_id"))
+            )
+            .drop("partition_id")
+        )
+        rolled = (
+            roll(src).withColumn("partition_id", self._partition_col())
+            .cache()
+        )
+        stats = {
+            r["partition_id"]: r
+            for r in rolled.groupBy("partition_id")
+            .agg(
+                F.min("bucket_ts").alias("lo"),
+                F.max("bucket_ts").alias("hi"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        }
+        # single commit: each replaced partition's tail becomes its
+        # fresh rows
+        replace = cuts if clear_all else {p: cuts[p] for p in stats}
+        if replace:
+            self._replace_tails(f"tier_{tier}", rolled, replace)
+        if stats:
+            # keep the compressed store consistent with the re-rolled
+            # tier rows (decompress(chunks) == tier must survive late
+            # data); its returned stats avoid a second Gorilla encode:
+            # points/raw = the re-rolled rows, comp = the affected
+            # conversations' stored chunk bytes
+            chunk_stats = self._rebuild_chunks(
+                tier,
+                rolled.select("conv_id").distinct(),
+                pids=sorted(stats),
+                since_ts=_epoch_ts(min_cut),
+            )
+            self._append_manifest([
+                self._manifest_row(
+                    tier, p, r["lo"], r["hi"],
+                    r["n"], r["n"] * 8 * (1 + len(METRIC_COLS)),
+                    chunk_stats.get(p, {"comp": 0})["comp"],
+                    new_snapshot,
+                )
+                for p, r in sorted(stats.items())
+            ])
+        rolled.unpersist()
+        return touched + len(stats)
+
     def update(
         self,
         transcripts: DataFrame,
@@ -718,529 +993,136 @@ class RollupJob:
         before the manifest append re-rolls from the old watermarks —
         the replacement is idempotent.
         """
-        from tsaug_spark.plans.rollup import TIERS
-
-        # a NULL watermark = a committed-but-empty partition: route it
-        # through the missing-partition path (run() then skips it via
-        # completed_partitions), matching the pre-cache behavior
-        cutoffs = {
-            p: wm
-            for p, wm in self._tier_watermarks(tier).items()
-            if wm is not None
-        }
-        if not cutoffs:
-            return self.run(transcripts, tier)
-        snapshot = new_snapshot or self.source_snapshot
-
-        part_col = F.pmod(
-            F.xxhash64("conv_id"), F.lit(self.n_partitions)
-        ).cast("int")
-        # floor the cutoff to the tier bucket grid: a grace that is not
-        # a multiple of the bucket width would otherwise KEEP the old
-        # full-bucket row (bucket_ts < cut_ts) while the re-roll emits
-        # a partial aggregate for the SAME bucket from raw rows >=
-        # cut_ts — two conflicting rows per (conv, bucket).  Cutoffs
-        # are computed DRIVER-SIDE from the cached watermarks so the
-        # global minimum is a LITERAL the source scan can prune on.
-        width = TIERS[tier][1]
-        g = _grace_seconds(grace)
-        cuts = {
-            p: (_ts_epoch(wm) - g) // width * width
-            for p, wm in cutoffs.items()
-        }
-        touched = 0
-        # partitions with no committed watermark: full first-time run
-        missing = [
-            p for p in range(self.n_partitions) if p not in cuts
-        ]
-        if missing:
-            touched += self.run(transcripts, tier, partitions=missing)
-
-        # one incremental pass over every watermarked partition: a
-        # literal min-cutoff prefilter reaches the parquet scan
-        # (PushedFilters / partition pruning on a ts-partitioned
-        # table), then each row keeps only if at/after ITS partition's
-        # aligned (watermark - grace), a literal map lookup
-        min_cut = min(cuts.values())
-        src = transcripts.filter(
-            F.col("ts") >= F.timestamp_seconds(F.lit(min_cut))
-        ).filter(F.col("ts") >= _cut_lookup(cuts, part_col))
-        rolled = (
-            rollup_transcripts(src, tier)
-            .withColumn("partition_id", part_col)
-            .cache()
-        )
-        # ONE collect for bounds + counts (was two jobs)
-        stats_rows = (
-            rolled.groupBy("partition_id")
-            .agg(
-                F.min("bucket_ts").alias("lo"),
-                F.max("bucket_ts").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        bounds = {r["partition_id"]: (r["lo"], r["hi"]) for r in stats_rows}
-        counts = {r["partition_id"]: r["n"] for r in stats_rows}
-        if not bounds:
-            rolled.unpersist()
-            return touched
-
-        # single commit: replace each re-rolled partition's tail with
-        # its fresh rows (partitions with no new rows keep theirs)
-        self._replace_tails(
-            f"tier_{tier}", rolled, {p: cuts[p] for p in bounds}
-        )
-        # keep the compressed store consistent with the re-rolled tier
-        # rows (decompress(chunks) == tier must survive late data);
-        # the returned stats avoid a second Gorilla encode — manifest
-        # metrics for a refresh are: points/raw = the re-rolled rows,
-        # comp = the affected conversations' stored chunk bytes
-        chunk_stats = self._rebuild_chunks(
+        return self._refresh_tails(
             tier,
-            rolled.select("conv_id").distinct(),
-            pids=sorted(bounds),
-            since_ts=_epoch_ts(min_cut),
-        )
-        row_bytes = 8 * (1 + len(METRIC_COLS))
-        now = time.time()
-        self._append_manifest(
-            [
-                (
-                    tier,
-                    p,
-                    snapshot,
-                    bounds[p][0],
-                    bounds[p][1],
-                    int(counts.get(p, 0)),
-                    int(counts.get(p, 0)) * row_bytes,
-                    int(chunk_stats.get(p, {"comp": 0})["comp"]),
-                    now,
-                )
-                for p in sorted(bounds)
-            ]
-        )
-        rolled.unpersist()
-        return touched + len(bounds)
-
-
-def _expiry_tier(tier: str) -> str:
-    """Manifest tier label for expiry commits (distinct from rollup
-    rows so ``watermarks()`` never sees them)."""
-    return f"{tier}#expired"
-
-
-def enforce_retention(
-    self, keep: "dict[str, Optional[str]]"
-) -> "dict[str, int]":
-    """Expire tier rows older than their retention window.
-
-    ``keep[tier]`` is a Spark INTERVAL body (e.g. ``"2 days"``) or
-    ``None`` = keep forever.  The cutoff for a tier anchors at the next
-    coarser tier's minimum committed rollup watermark — rows are only
-    expired once the cascade above them has absorbed them — falling
-    back to the tier's own watermark for the coarsest tier.  Wall clock
-    is never consulted: rerunning expiry against an unchanged manifest
-    is a no-op, so the operation is idempotent and resumable like every
-    other commit in this job.
-
-    Scale note: on Iceberg this is ``DELETE WHERE bucket_ts < cutoff``
-    — a metadata-only, partition-pruned commit.  The parquet-snapshot
-    fallback rewrites the table filtered and commits atomically; chunk
-    tables expire together with their tier.  Returns rows dropped per
-    tier, and records each expiry in the manifest (tier label
-    ``<tier>#expired``, ``range_start_ts`` = the anchor used,
-    ``watermark_ts`` = the computed expiry cutoff,
-    points_rolled = -dropped).
-    """
-    from tsaug_spark.plans.rollup import TIER_ORDER
-
-    dropped: dict[str, int] = {}
-    for i, tier in enumerate(TIER_ORDER):
-        dur = keep.get(tier)
-        if dur is None:
-            continue
-        # the minimum over partitions of each one's max watermark, from
-        # the driver-side cache (no manifest job)
-        anchor = None
-        for t in TIER_ORDER[i + 1:] + [tier]:
-            wms = [
-                wm for wm in self._tier_watermarks(t).values()
-                if wm is not None
-            ]
-            if wms:
-                anchor = min(wms)
-                break
-        if anchor is None:
-            continue  # tier never rolled up — nothing to expire
-        cutoff = F.lit(anchor) - F.expr(f"INTERVAL {dur}")
-        # concrete expiry boundary for the manifest lineage row
-        cutoff_val = (
-            self.spark.range(1).select(cutoff.alias("c")).collect()[0]["c"]
+            grace,
+            new_snapshot,
+            transcripts.withColumn("partition_id", self._partition_col()),
+            "ts",
+            lambda src: rollup_transcripts(src, tier),
+            lambda ps: self.run(transcripts, tier, partitions=ps),
+            clear_all=False,
         )
 
-        tier_table = self.table(f"tier_{tier}")
-        if not tier_table.exists():
-            continue
-        cur = tier_table.read(self.spark)
-        n_old = cur.filter(F.col("bucket_ts") < cutoff).count()
-        dropped[tier] = n_old
-        if n_old == 0:
-            continue
-        # materialize the affected conv_id set BEFORE overwriting the
-        # tier: with a lazily-resolving backend (Iceberg) an unforced
-        # plan over `cur` would re-read the already-overwritten table
-        # and evaluate empty, leaving stale chunk rows alive.  The
-        # distinct conv_id set is small (one row per expiring
-        # conversation), so a durable scratch commit is cheap.
-        scratch = self.table(f"_scratch_expiry_{tier}")
-        scratch.overwrite(
-            cur.filter(F.col("bucket_ts") < cutoff)
-            .select("conv_id")
-            .distinct()
-        )
-        tier_table.overwrite(cur.filter(F.col("bucket_ts") >= cutoff))
+    def cascade_update(
+        self,
+        fine: str,
+        coarse: str,
+        grace: str = "1 hour",
+        new_snapshot: "Optional[str]" = None,
+    ) -> int:
+        """Incremental continuous-aggregate refresh of ``coarse`` FROM
+        ``fine`` — the tier-to-tier twin of ``update()`` (TimescaleDB's
+        incremental continuous-aggregate refresh, not a full re-cascade).
 
-        # chunk rows carry no bucket_ts; re-derive from their
-        # conversations' surviving tier rows via the partition-scoped
-        # rebuild (drops chunks of fully-expired conversations,
-        # rebuilds the rest, touches only their partitions)
-        self._rebuild_chunks(tier, scratch.read(self.spark))
+        Per partition, only the coarse buckets at/after the committed
+        coarse rollup watermark minus ``grace`` are re-aggregated from the
+        fine tier; the cutoff is floored to the COARSE bucket grid so no
+        partial bucket is ever rebuilt from a fine-row suffix.  Exactly
+        those rows are replaced in one since-bounded commit
+        (``_replace_tails``; untouched partitions and older buckets keep
+        their rows), compressed chunk rows are re-derived for the affected
+        conversations only, and manifest rows land with the advanced
+        watermark + ``new_snapshot`` lineage.  Partitions with no committed
+        coarse rows get a full ``cascade_tier`` pass.
 
-        self._append_manifest(
-            [
-                (
-                    _expiry_tier(tier),
-                    -1,
-                    self.source_snapshot,
-                    anchor,       # range_start_ts: the anchor used
-                    cutoff_val,   # watermark_ts: the expiry boundary
-                    -n_old,
-                    0,
-                    0,
-                    time.time(),
-                )
-            ]
-        )
-    return dropped
-
-
-RollupJob.enforce_retention = enforce_retention
-
-
-def cascade_tier(
-    self,
-    fine: str,
-    coarse: str,
-    resume: bool = True,
-    partitions: "Optional[Sequence[int]]" = None,
-) -> int:
-    """Continuous-aggregate maintenance of ``coarse`` FROM ``fine``,
-    with the same per-partition checkpoint/lineage/metrics contract as
-    ``run`` — every tier in the cascade is resumable and manifest-
-    tracked, not just the first.  Reads only the fine tier (never the
-    raw table), so the cascade cost is proportional to tier size.
-
-    Re-running under a NEW source snapshot (the late-data workflow)
-    REPLACES each partition's coarse rows rather than appending —
-    otherwise every re-run would stack duplicate buckets into the
-    coarse tier.  On Iceberg this is a condition overwrite; the
-    parquet-snapshot table keeps other partitions' files by reference.
-    """
-    from tsaug_spark.plans.rollup import reaggregate
-
-    fine_df = self.table(f"tier_{fine}").read(self.spark)
-    todo = list(
-        partitions if partitions is not None else range(self.n_partitions)
-    )
-    if resume:
-        done = self.completed_partitions(coarse)
-        todo = [p for p in todo if p not in done]
-
-    for p in todo:
-        src = fine_df.filter(F.col("partition_id") == p).drop(
-            "partition_id"
-        )
-        rolled = reaggregate(src, fine, coarse).cache()
-        chunks = compress_tier(
-            rolled, METRIC_COLS, window_s=_chunk_window(coarse)
-        ).cache()
-        stats = chunks.agg(
-            F.coalesce(F.sum("n_points"), F.lit(0)).alias("points"),
-            F.coalesce(F.sum("bytes_raw"), F.lit(0)).alias("raw"),
-            F.coalesce(F.sum("bytes_compressed"), F.lit(0)).alias("comp"),
-        ).collect()[0]
-        lo, wm = rolled.agg(
-            F.min("bucket_ts"), F.max("bucket_ts")
-        ).collect()[0]
-        self._replace_partition(
-            f"tier_{coarse}", p, rolled.withColumn("partition_id", F.lit(p))
-        )
-        self._replace_partition(
-            f"tier_{coarse}_chunks",
-            p,
-            chunks.withColumn("partition_id", F.lit(p)),
-        )
-        self._append_manifest(
-            [
-                (
-                    coarse,
-                    p,
-                    self.source_snapshot,
-                    lo,
-                    wm,
-                    int(stats["points"]),
-                    int(stats["raw"]),
-                    int(stats["comp"]),
-                    time.time(),
-                )
-            ]
-        )
-        rolled.unpersist()
-        chunks.unpersist()
-    return len(todo)
-
-
-RollupJob.cascade_tier = cascade_tier
-
-
-def cascade_update(
-    self,
-    fine: str,
-    coarse: str,
-    grace: str = "1 hour",
-    new_snapshot: "Optional[str]" = None,
-) -> int:
-    """Incremental continuous-aggregate refresh of ``coarse`` FROM
-    ``fine`` — the tier-to-tier twin of ``update()`` (TimescaleDB's
-    incremental continuous-aggregate refresh, not a full re-cascade).
-
-    Per partition, only the coarse buckets at/after the committed
-    coarse rollup watermark minus ``grace`` are re-aggregated from the
-    fine tier; the cutoff is floored to the COARSE bucket grid so no
-    partial bucket is ever rebuilt from a fine-row suffix.  Exactly
-    those rows are replaced in one since-bounded commit
-    (``_replace_tails``; untouched partitions and older buckets keep
-    their rows), compressed chunk rows are re-derived for the affected
-    conversations only, and manifest rows land with the advanced
-    watermark + ``new_snapshot`` lineage.  Partitions with no committed
-    coarse rows get a full ``cascade_tier`` pass.
-
-    Cost at scale: reads the fine tier's re-rollable tail (bucket_ts
-    predicate -> row-group pruning on the footer statistics) and
-    writes only the coarse tier's tail — never the whole coarse table.
-    """
-    from tsaug_spark.plans.rollup import TIERS, reaggregate
-
-    cutoffs = {
-        p: wm
-        for p, wm in self._tier_watermarks(coarse).items()
-        if wm is not None
-    }
-    if not cutoffs:
-        return self.cascade_tier(fine, coarse)
-    snapshot = new_snapshot or self.source_snapshot
-    width = TIERS[coarse][1]
-
-    touched = 0
-    missing = [
-        p for p in range(self.n_partitions) if p not in cutoffs
-    ]
-    if missing:
-        touched += self.cascade_tier(
-            fine, coarse, resume=False, partitions=missing
+        Cost at scale: reads the fine tier's re-rollable tail (bucket_ts
+        predicate -> row-group pruning on the footer statistics) and
+        writes only the coarse tier's tail — never the whole coarse table.
+        """
+        return self._refresh_tails(
+            coarse,
+            grace,
+            new_snapshot,
+            self.table(f"tier_{fine}").read(self.spark),
+            "bucket_ts",
+            lambda src: reaggregate(src, fine, coarse),
+            lambda ps: self.cascade_tier(
+                fine, coarse, resume=ps is None, partitions=ps
+            ),
+            clear_all=True,
         )
 
-    part_col = F.pmod(
-        F.xxhash64("conv_id"), F.lit(self.n_partitions)
-    ).cast("int")
-    # driver-side aligned cutoffs (cached watermarks, zero manifest
-    # jobs) — the global minimum is a LITERAL so the fine-tier scan
-    # prunes files/row-groups on bucket_ts instead of reading it all
-    g = _grace_seconds(grace)
-    cuts = {
-        p: (_ts_epoch(wm) - g) // width * width
-        for p, wm in cutoffs.items()
-    }
-    min_cut = min(cuts.values())
+    def enforce_retention(
+        self, keep: "dict[str, Optional[str]]"
+    ) -> "dict[str, int]":
+        """Expire tier rows older than their retention window.
 
-    fine_df = self.table(f"tier_{fine}").read(self.spark)
-    src = (
-        fine_df.filter(
-            F.col("bucket_ts") >= F.timestamp_seconds(F.lit(min_cut))
-        )
-        .filter(
-            F.col("bucket_ts") >= _cut_lookup(cuts, F.col("partition_id"))
-        )
-        .drop("partition_id")
-    )
-    rolled = (
-        reaggregate(src, fine, coarse)
-        .withColumn("partition_id", part_col)
-        .cache()
-    )
+        ``keep[tier]`` is a Spark INTERVAL body (e.g. ``"2 days"``) or
+        ``None`` = keep forever.  The cutoff for a tier anchors at the next
+        coarser tier's minimum committed rollup watermark — rows are only
+        expired once the cascade above them has absorbed them — falling
+        back to the tier's own watermark for the coarsest tier.  Wall clock
+        is never consulted: rerunning expiry against an unchanged manifest
+        is a no-op, so the operation is idempotent and resumable like every
+        other commit in this job.
 
-    # single tail-replace commit, FIRST action on `rolled`
-    # (materializes the cache inside the write — no separate pre-write
-    # stats job): every watermarked partition is synced to the fine
-    # tier's current tail — a partition whose re-roll came back EMPTY
-    # gets its stale tail cleared too, exactly what a full
-    # re-aggregation would produce.  The replace set is driver-known
-    # (the cutoff map), so no collect is needed to build it.
-    self._replace_tails(f"tier_{coarse}", rolled, cuts)
-    # bounds + counts from the already-materialized cache (cheap)
-    stats_rows = (
-        rolled.groupBy("partition_id")
-        .agg(
-            F.min("bucket_ts").alias("lo"),
-            F.max("bucket_ts").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )
-    bounds = {r["partition_id"]: (r["lo"], r["hi"]) for r in stats_rows}
-    counts = {r["partition_id"]: r["n"] for r in stats_rows}
-    if not bounds:
-        rolled.unpersist()
-        return touched
-    # chunk rebuild returns the stored-chunk stats, so no second
-    # Gorilla encode runs just for manifest metrics (points/raw = the
-    # re-aggregated rows; comp = affected conversations' chunk bytes)
-    chunk_stats = self._rebuild_chunks(
-        coarse,
-        rolled.select("conv_id").distinct(),
-        pids=sorted(bounds),
-        since_ts=_epoch_ts(min_cut),
-    )
-    row_bytes = 8 * (1 + len(METRIC_COLS))
-    now = time.time()
-    self._append_manifest(
-        [
-            (
-                coarse,
-                p,
-                snapshot,
-                bounds[p][0],
-                bounds[p][1],
-                int(counts.get(p, 0)),
-                int(counts.get(p, 0)) * row_bytes,
-                int(chunk_stats.get(p, {"comp": 0})["comp"]),
-                now,
+        Scale note: on Iceberg this is ``DELETE WHERE bucket_ts < cutoff``
+        — a metadata-only, partition-pruned commit.  The parquet-snapshot
+        fallback rewrites the table filtered and commits atomically; chunk
+        tables expire together with their tier.  Returns rows dropped per
+        tier, and records each expiry in the manifest (tier label
+        ``<tier>#expired``, ``range_start_ts`` = the anchor used,
+        ``watermark_ts`` = the computed expiry cutoff,
+        points_rolled = -dropped).
+        """
+        dropped: dict[str, int] = {}
+        for i, tier in enumerate(TIER_ORDER):
+            dur = keep.get(tier)
+            if dur is None:
+                continue
+            # the minimum over partitions of each one's max watermark,
+            # from the driver-side cache (no manifest job)
+            anchor = None
+            for t in TIER_ORDER[i + 1:] + [tier]:
+                wms = [
+                    wm for wm in self._tier_watermarks(t).values()
+                    if wm is not None
+                ]
+                if wms:
+                    anchor = min(wms)
+                    break
+            if anchor is None:
+                continue  # tier never rolled up — nothing to expire
+            tier_table = self.table(f"tier_{tier}")
+            if not tier_table.exists():
+                continue
+            cutoff = F.lit(anchor) - F.expr(f"INTERVAL {dur}")
+            cur = tier_table.read(self.spark)
+            # one job: the expiring-row count and, for the manifest
+            # lineage row, the concrete boundary (the cutoff is a
+            # foldable literal, so it aggregates like a constant)
+            n_old, cutoff_val = cur.agg(
+                F.count_if(F.col("bucket_ts") < cutoff), F.max(cutoff)
+            ).collect()[0]
+            dropped[tier] = n_old
+            if n_old == 0:
+                continue
+            # materialize the affected conv_id set BEFORE overwriting the
+            # tier: with a lazily-resolving backend (Iceberg) an unforced
+            # plan over `cur` would re-read the already-overwritten table
+            # and evaluate empty, leaving stale chunk rows alive.  The
+            # distinct conv_id set is small (one row per expiring
+            # conversation), so a durable scratch commit is cheap.
+            scratch = self.table(f"_scratch_expiry_{tier}")
+            scratch.overwrite(
+                cur.filter(F.col("bucket_ts") < cutoff)
+                .select("conv_id")
+                .distinct()
             )
-            for p in sorted(bounds)
-        ]
-    )
-    rolled.unpersist()
-    return touched + len(bounds)
+            tier_table.overwrite(cur.filter(F.col("bucket_ts") >= cutoff))
 
+            # chunk rows carry no bucket_ts; re-derive from their
+            # conversations' surviving tier rows via the partition-scoped
+            # rebuild (drops chunks of fully-expired conversations,
+            # rebuilds the rest, touches only their partitions)
+            self._rebuild_chunks(tier, scratch.read(self.spark))
 
-RollupJob.cascade_update = cascade_update
-
-
-def op_downsample_tier(
-    self,
-    fine: str,
-    out_name: str,
-    op,
-    value_cols: "Sequence[str]" = METRIC_COLS,
-    min_len: int = 1,
-    resume: bool = True,
-    partitions: "Optional[Sequence[int]]" = None,
-) -> int:
-    """Operator-downsampled tier: run a tsaug series operator (Pool /
-    Resize / Convolve / Quantize — the reference's downsampler set) as
-    the fine→coarse transform over each conversation's tier series,
-    under the SAME per-partition checkpoint / lineage / metrics
-    contract as ``cascade_tier``.
-
-    This is the north-star wiring: the continuous-aggregate cascade's
-    downsampler is a pandas-on-Arrow reimplementation of the reference
-    operator, not just an algebraic re-aggregate — e.g. ``Pool('ave',
-    4)`` over the 1h tier produces a mean-pooled 4h tier, and
-    ``Convolve`` a smoothed tier.  Each conversation's series is
-    indexed in ``bucket_ts`` order and fed to the distributed kernel
-    (``plans/pack.py::apply_operator``, subseed mode — zero driver
-    state); the output tier is keyed (conv_id, bucket_idx) in operator
-    index space, with the manifest row carrying the SOURCE time range
-    [lo, watermark] and points-rolled metrics for lineage.  Re-running
-    under a new source snapshot replaces each partition (same
-    late-data semantics as ``cascade_tier``).  Chunk compression is
-    not applied to operator tiers (operator output is not
-    timestamp-gridded; the algebraic tiers remain the compressed
-    store).
-
-    ``min_len`` excludes conversations with fewer fine buckets than
-    the operator can consume (the reference's own Pool/Resize raise on
-    sub-block series — parity-preserved here), e.g. ``min_len=size``
-    for Pool; excluded conversations simply have no rows in the
-    operator tier, the same contract as a HAVING clause.
-    """
-    from tsaug_spark.plans.pack import apply_operator
-
-    if getattr(op, "repeats", 1) != 1:
-        raise ValueError(
-            "op_downsample_tier writes (conv_id, bucket_idx)-keyed "
-            "tier rows; repeats > 1 would collapse the rep_idx axis "
-            "into duplicate keys — run augmentation via apply_pipe "
-            "instead"
-        )
-    value_cols = list(value_cols)
-    fine_df = self.table(f"tier_{fine}").read(self.spark)
-    todo = list(
-        partitions if partitions is not None else range(self.n_partitions)
-    )
-    if resume:
-        done = self.completed_partitions(out_name)
-        todo = [p for p in todo if p not in done]
-
-    w = Window.partitionBy("conv_id").orderBy("bucket_ts")
-    for p in todo:
-        src = fine_df.filter(F.col("partition_id") == p).drop(
-            "partition_id"
-        )
-        cw = Window.partitionBy("conv_id")
-        series = (
-            src.select(
-                "conv_id",
-                (F.row_number().over(w) - 1).alias("bucket_idx"),
-                "bucket_ts",
-                F.count(F.lit(1)).over(cw).alias("_T"),
-                *[F.col(c).cast("double").alias(c) for c in value_cols],
-            )
-            .filter(F.col("_T") >= min_len)
-            .drop("_T")
-            .cache()
-        )
-        out = apply_operator(
-            series.drop("bucket_ts"), op, value_cols, mode="subseed"
-        ).drop("rep_idx").cache()
-        n_rows = out.count()
-        lo, wm = src.agg(
-            F.min("bucket_ts"), F.max("bucket_ts")
-        ).collect()[0]
-        self._replace_partition(
-            f"tier_{out_name}",
-            p,
-            out.withColumn("partition_id", F.lit(p)),
-        )
-        self._append_manifest(
-            [
-                (
-                    out_name,
-                    p,
-                    self.source_snapshot,
-                    lo,
-                    wm,
-                    int(n_rows * len(value_cols)),
-                    0,
-                    0,
-                    time.time(),
+            # range_start_ts = the anchor used, watermark_ts = the
+            # expiry boundary
+            self._append_manifest([
+                self._manifest_row(
+                    _expiry_tier(tier), -1, anchor, cutoff_val, -n_old
                 )
-            ]
-        )
-        series.unpersist()
-        out.unpersist()
-    return len(todo)
-
-
-RollupJob.op_downsample_tier = op_downsample_tier
+            ])
+        return dropped

@@ -19,8 +19,6 @@ file older than the batch by reference.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,10 +44,7 @@ def merge_batch_into_tier(
     Pass something stable per checkpoint (run_stream_ingest_once
     derives it from the checkpoint dir)."""
     spark = batch_df.sparkSession
-    part_col = F.pmod(
-        F.xxhash64("conv_id"), F.lit(job.n_partitions)
-    ).cast("int")
-    rows = batch_df.withColumn("partition_id", part_col).cache()
+    rows = batch_df.withColumn("partition_id", job._partition_col()).cache()
     # ONE action materializes the cache and yields count, lineage
     # bounds and the touched partitions together
     n, lo, wm, touched = rows.agg(
@@ -114,20 +109,9 @@ def merge_batch_into_tier(
     if snap in seen_all[seen_key]:
         rows.unpersist()
         return
+    # streaming commits are not partition-scoped: partition_id -1
     job._append_manifest(
-        [
-            (
-                tier,
-                -1,  # streaming commits are not partition-scoped
-                snap,
-                lo,
-                wm,
-                int(n),
-                0,
-                0,
-                time.time(),
-            )
-        ]
+        [job._manifest_row(tier, -1, lo, wm, n, snapshot=snap)]
     )
     seen_all[seen_key].add(snap)
     rows.unpersist()
