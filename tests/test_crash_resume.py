@@ -1,16 +1,22 @@
-"""Crash consistency of the per-partition tier builds.
+"""Crash consistency of the per-partition tier builds and of the tail
+refreshes.
 
 A build commits each partition as tier rows, then chunk rows, then its
 manifest row.  A crash at any of those points must resume to the
 tables of a single-shot build, and so must a re-run under a new source
 snapshot or with ``resume=False``: every build replaces the partitions
-it builds, so none is ever held twice.  Both table backends.
+it builds, so none is ever held twice.  A refresh (``update``,
+``cascade_update``) commits the tier tails, then the rebuilt chunks,
+then the manifest rows; re-running it after a crash at any of those
+points must give the tables of a single-shot refresh.  Both table
+backends.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from tsaug_spark.sources.checkpoint import RollupJob
 from tsaug_spark.sources.tables import ParquetSnapshotTable
@@ -128,3 +134,76 @@ def test_run_without_resume_replaces(
     assert job.run(transcripts, "1m") == P
     assert job.run(transcripts, "1m", resume=False) == P
     _assert_same(_tables(spark, job, "1m"), single_shot["1m"])
+
+
+def _early(transcripts):
+    lo, hi = transcripts.agg(
+        F.min(F.unix_timestamp("ts")), F.max(F.unix_timestamp("ts"))
+    ).collect()[0]
+    return transcripts.filter(
+        F.col("ts") < F.timestamp_seconds(F.lit(int(lo + 0.7 * (hi - lo))))
+    )
+
+
+REFRESH = {
+    "update": ("1m", lambda j, t: j.update(
+        t, "1m", grace="2 hours", new_snapshot="snapB")),
+    "cascade_update": ("1h", lambda j, t: j.cascade_update(
+        "1m", "1h", grace="2 hours", new_snapshot="snapB")),
+}
+
+
+def _built(spark, transcripts, path, table_cls, upto) -> RollupJob:
+    """A job over the early input's 1m and 1h tiers, refreshed with the
+    late input by every step of ``REFRESH`` before ``upto`` (``None``:
+    every step)."""
+    job = RollupJob(spark, path, n_partitions=P, source_snapshot="snapA",
+                    table_cls=table_cls)
+    job.run(_early(transcripts), "1m")
+    job.cascade_tier("1m", "1h")
+    for step, (_, refresh) in REFRESH.items():
+        if step == upto:
+            break
+        refresh(job, transcripts)
+    return job
+
+
+@pytest.fixture(scope="module")
+def single_shot_refresh(spark, transcripts, tmp_path_factory):
+    job = _built(spark, transcripts, str(tmp_path_factory.mktemp("solo_r")),
+                 ParquetSnapshotTable, upto=None)
+    return {
+        t: (_tables(spark, job, t), job._tier_watermarks(t))
+        for t in ("1m", "1h")
+    }
+
+
+# (table, nth commit since arming, crash after the commit returns)
+REFRESH_CRASH_POINTS = {
+    "after_tail_replace": ("{t}", 1, True),
+    "after_chunk_rebuild": ("{t}_chunks", 1, True),
+    "before_manifest_append": ("_manifest", 1, False),
+}
+
+
+@pytest.mark.parametrize("point", sorted(REFRESH_CRASH_POINTS))
+@pytest.mark.parametrize("step", sorted(REFRESH))
+def test_refresh_crash_then_rerun_equals_single_shot(
+    spark, transcripts, tmp_path, table_cls, single_shot_refresh, step,
+    point
+):
+    tier, refresh = REFRESH[step]
+    path = str(tmp_path / "job")
+    crashed = _built(spark, transcripts, path, table_cls, upto=step)
+    name, nth, after = REFRESH_CRASH_POINTS[point]
+    _arm(crashed, name.format(t=f"tier_{tier}"), nth, after)
+    with pytest.raises(Crash):
+        refresh(crashed, transcripts)
+
+    rerun = RollupJob(spark, path, n_partitions=P, source_snapshot="snapA",
+                      table_cls=table_cls)
+    assert refresh(rerun, transcripts) > 0
+    want, want_wms = single_shot_refresh[tier]
+    _assert_same(_tables(spark, rerun, tier), want)
+    fresh = RollupJob(spark, path, n_partitions=P, table_cls=table_cls)
+    assert fresh._tier_watermarks(tier) == want_wms

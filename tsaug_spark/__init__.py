@@ -39,7 +39,11 @@ from tsaug_spark.operators import (
     Reverse,
     TimeWarp,
 )
-from tsaug_spark.session import get_spark
+from tsaug_spark.session import get_spark, skip_unchanged_zip_rereads
+
+# every Python worker imports the package when it unpickles an engine
+# kernel, so this reaches the workers that run them
+skip_unchanged_zip_rereads()
 
 __version__ = "0.1.0"
 
