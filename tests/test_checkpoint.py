@@ -12,6 +12,8 @@ ADVICE r2 stale-lazy-read finding).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -28,7 +30,8 @@ def test_lazy_double_reproduces_stale_read_hazard(spark, tmp_path):
     """The double must be a real trap, not a tautology: a lazy plan
     derived from read() dies when storage is replaced underneath it —
     the exact hazard IcebergTable's materialize-first overwrite (and
-    the scratch commit in enforce_retention) exists to avoid."""
+    enforce_retention's eager truncation of the expiring set) exists to
+    avoid."""
     t = InPlaceLazyTable(str(tmp_path / "hz"))
     t.overwrite(spark.range(10).withColumn("v", F.col("id") * 2))
     stale_plan = t.read(spark).filter(F.col("id") >= 5)
@@ -111,6 +114,41 @@ def test_kill_resume_equals_single_shot(spark, transcripts, tmp_path, table_cls)
     )
     pd.testing.assert_frame_equal(
         a.reset_index(drop=True), b.reset_index(drop=True)
+    )
+
+
+def test_update_builds_new_conversation_in_committed_empty_partition(
+    spark, transcripts, tmp_path
+):
+    """A partition the build committed empty (NULL watermark) has no
+    tail to refresh: ``update`` must build it in full when a new
+    conversation lands in it, though the manifest records it for the
+    job's snapshot, and so equal a from-scratch rollup of the new
+    data."""
+    job = RollupJob(spark, str(tmp_path / "ce"), n_partitions=4,
+                    source_snapshot="snapE")
+    part = job._partition_col()
+    used = transcripts.select(part.alias("p")).first()["p"]
+    new_conv = (
+        transcripts.filter(part != used).select("conv_id").first()[0]
+    )
+    old = transcripts.filter(part == used)
+    new = old.unionByName(transcripts.filter(F.col("conv_id") == new_conv))
+    assert job.run(old, "1m") == 4
+    # the three committed-empty partitions are built in full, the used
+    # one has its tail refreshed
+    assert job.update(new, "1m", grace="1 hour") == 4
+
+    got = job.read_tier("1m").orderBy("conv_id", "bucket_ts").toPandas()
+    want = (
+        rollup_transcripts(new, "1m")
+        .orderBy("conv_id", "bucket_ts")
+        .toPandas()
+    )
+    assert (got["conv_id"] == new_conv).any()
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True),
+        check_dtype=False,
     )
 
 
@@ -221,6 +259,11 @@ def test_retention_expiry(spark, transcripts, tmp_path, table_cls):
     assert pd.Timestamp(exp_rows[0]["range_start_ts"]) == pd.Timestamp(
         wm_1h
     )
+    # the expiring conv_id set is held in memory, never committed
+    assert not [
+        n for n in os.listdir(tmp_path / "ret")
+        if n.startswith("_scratch_expiry")
+    ]
 
 
 def test_cascade_tier_checkpointed(spark, transcripts, tmp_path, table_cls):
@@ -588,6 +631,27 @@ def test_op_downsample_tier_pool_equals_local(
     assert set(m["partition_id"]) == {0, 1}
     assert (m["points_rolled"] > 0).all()
     assert m["source_snapshot"].eq("snapOP").all()
+
+
+def test_op_downsample_tier_min_len_defaults_to_the_op(
+    spark, transcripts, tmp_path
+):
+    """Without ``min_len`` the tier excludes the series the op cannot
+    pool (Pool: shorter than its largest block), as ``min_len=4``."""
+    from tsaug_spark.operators import Pool, Resize
+
+    job = RollupJob(spark, str(tmp_path / "mlen"), n_partitions=1)
+    job.run(transcripts, "1h")
+    assert job.op_downsample_tier("1h", "pool_default", Pool("ave", 4)) == 1
+    job.op_downsample_tier("1h", "pool_4", Pool("ave", 4), min_len=4)
+    got, want = (
+        job.read_tier(name).orderBy("conv_id", "bucket_idx").toPandas()
+        for name in ("pool_default", "pool_4")
+    )
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(got, want)
+    assert Pool("max", [2, 6]).min_length == 6
+    assert Resize(size=12).min_length == 1
 
 
 def test_op_downsample_tier_all_reference_downsamplers(

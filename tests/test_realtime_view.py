@@ -55,16 +55,25 @@ def test_realtime_equals_stored_when_caught_up(
 def test_realtime_with_uncommitted_partitions(
     spark, transcripts, tmp_path
 ):
-    """Partitions never rolled (no watermark) must come entirely from
-    raw — the global pre-filter may not prune their history."""
-    job = RollupJob(
+    """Partitions never rolled (no watermark) and partitions committed
+    empty (NULL watermark) must come entirely from raw — the global
+    pre-filter may not prune their history."""
+    never_rolled = RollupJob(
         spark, str(tmp_path / "rt"), n_partitions=4,
         source_snapshot="s1",
     )
-    job.run(transcripts, "1m", partitions=[0, 2])
-    got = _as_map(job.read_tier_realtime("1m", transcripts))
+    never_rolled.run(transcripts, "1m", partitions=[0, 2])
+    committed_empty = RollupJob(
+        spark, str(tmp_path / "rt_empty"), n_partitions=4,
+        source_snapshot="s1",
+    )
+    part = committed_empty._partition_col()
+    used = transcripts.select(part.alias("p")).first()["p"]
+    committed_empty.run(transcripts.filter(part == used), "1m")
     want = _as_map(rollup_transcripts(transcripts, "1m"))
-    assert got == want and got
+    for job in (never_rolled, committed_empty):
+        got = _as_map(job.read_tier_realtime("1m", transcripts))
+        assert got == want and got, job.work_dir
 
 
 def test_realtime_before_any_commit_is_fresh_rollup(

@@ -194,6 +194,11 @@ class SeriesOp(ABC):
         """
         return T
 
+    @property
+    def min_length(self) -> int:
+        """Shortest input series the operator accepts."""
+        return 1
+
     # ----------------------------------------------------------- augment
 
     @property

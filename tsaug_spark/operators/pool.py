@@ -72,6 +72,12 @@ class Pool(SeriesOp):
             raise TypeError("Parameter `per_channel` must be boolean.")
         self._per_channel = p
 
+    @property
+    def min_length(self) -> int:
+        """One full block of the largest block size: ``pool_rows`` (like
+        the reference) cannot pool a series shorter than its block."""
+        return max(expand_int_spec(self.size))
+
     def plan_block_sizes(
         self, rng: np.random.RandomState, n_rows: int, n_channels: int
     ) -> np.ndarray:

@@ -11,10 +11,13 @@ bytes_raw, bytes_compressed) per the north rule.
 
 Every tier build (``run``, ``cascade_tier``, ``op_downsample_tier``)
 REPLACES each partition it builds: tier rows, then chunk rows, then the
-manifest row, which lands last.  Resume = anti-join of the partition
-list against the manifest: partitions with a committed manifest row for
-(tier, source snapshot) are skipped, and a partition a crash left
-without one is rebuilt over whatever it committed, so a killed job
+manifest row, which lands last.  Every lineage question (which
+partitions are done, each partition's watermark, whether a stream batch
+is recorded) is answered on the driver from the job's lineage list: the
+(tier, partition_id, source_snapshot, watermark_ts) of every manifest
+row, read once and extended by every commit.  Resume skips partitions
+with a lineage row for (tier, source snapshot), and a partition a crash
+left without one is rebuilt over whatever it committed, so a killed job
 continues where it stopped and the final table equals the single-shot
 run (tests/test_checkpoint.py proves this).
 
@@ -156,7 +159,7 @@ def _epoch_ts(epoch: int):
 
 def _expiry_tier(tier: str) -> str:
     """Manifest tier label for expiry commits (distinct from rollup
-    rows so ``watermarks()`` never sees them)."""
+    rows so no watermark question of ``tier`` sees them)."""
     return f"{tier}#expired"
 
 
@@ -176,6 +179,9 @@ class RollupJob:
     # pyarrow.Table as well as a DataFrame: manifest commits pass one.
     table_cls: type = ParquetSnapshotTable
     _tables: dict = field(default_factory=dict)
+    _lineage_rows: "Optional[list]" = field(
+        default=None, init=False, repr=False
+    )
 
     def table(self, name: str):
         if name not in self._tables:
@@ -189,20 +195,41 @@ class RollupJob:
         return self.table("_manifest")
 
     # ------------------------------------------------------------ status
+    def _lineage(self) -> list:
+        """(tier, partition_id, source_snapshot, watermark_ts) of every
+        manifest row: one collect the first time a lineage question is
+        asked (empty when no manifest exists yet), then extended by
+        :meth:`_append_manifest` after each commit.  A job object sees
+        its own commits plus what the manifest held when it first read
+        it; a second live job over the same work_dir is not seen until
+        a fresh job object reads the manifest again.  A stale "pending"
+        answer costs an idempotent rebuild, never a wrong table, since
+        every build replaces its partitions."""
+        if self._lineage_rows is None:
+            self._lineage_rows = [] if not self.manifest.exists() else [
+                tuple(r) for r in self.manifest.read(self.spark).select(
+                    "tier", "partition_id", "source_snapshot", "watermark_ts"
+                ).collect()
+            ]
+        return self._lineage_rows
+
     def completed_partitions(self, tier: str) -> set[int]:
-        if not self.manifest.exists():
-            return set()
-        rows = (
-            self.manifest.read(self.spark)
-            .filter(
-                (F.col("tier") == tier)
-                & (F.col("source_snapshot") == self.source_snapshot)
-            )
-            .select("partition_id")
-            .distinct()
-            .collect()
+        """Partitions with a manifest row for (``tier``, source
+        snapshot)."""
+        return {
+            p
+            for t, p, snap, _ in self._lineage()
+            if t == tier and snap == self.source_snapshot
+        }
+
+    def snapshot_recorded(self, tier: str, snapshot: str) -> bool:
+        """Whether a manifest row of ``tier`` carries the source
+        snapshot label ``snapshot`` (the stream sink's at-least-once
+        lineage dedup)."""
+        return any(
+            t == tier and snap == snapshot
+            for t, _, snap, _ in self._lineage()
         )
-        return {r[0] for r in rows}
 
     def metrics(self, tier: Optional[str] = None) -> DataFrame:
         df = self.manifest.read(self.spark)
@@ -272,13 +299,15 @@ class RollupJob:
             chunks = compress_tier(
                 rolled, METRIC_COLS, window_s=_chunk_window(tier)
             ).cache()
+            # the chunks cover every rolled row, and their zone maps
+            # bound its (grid-aligned) bucket_ts: one aggregate gives
+            # the metrics and the lineage range
             stats = chunks.agg(
                 F.coalesce(F.sum("n_points"), F.lit(0)).alias("points"),
                 F.coalesce(F.sum("bytes_raw"), F.lit(0)).alias("raw"),
                 F.coalesce(F.sum("bytes_compressed"), F.lit(0)).alias("comp"),
-            ).collect()[0]
-            lo, wm = rolled.agg(
-                F.min("bucket_ts"), F.max("bucket_ts")
+                F.min("ts_min").alias("lo"),
+                F.max("ts_max").alias("wm"),
             ).collect()[0]
             rows = rolled.withColumn("partition_id", F.lit(p))
             if ranged:
@@ -287,7 +316,7 @@ class RollupJob:
                 tier,
                 p,
                 self._manifest_row(
-                    tier, p, lo, wm,
+                    tier, p, stats["lo"], stats["wm"],
                     stats["points"], stats["raw"], stats["comp"],
                 ),
                 rows,
@@ -362,7 +391,7 @@ class RollupJob:
         out_name: str,
         op,
         value_cols: "Sequence[str]" = METRIC_COLS,
-        min_len: int = 1,
+        min_len: "Optional[int]" = None,
         resume: bool = True,
         partitions: "Optional[Sequence[int]]" = None,
     ) -> int:
@@ -390,9 +419,10 @@ class RollupJob:
 
         ``min_len`` excludes conversations with fewer fine buckets than
         the operator can consume (the reference's own Pool/Resize raise on
-        sub-block series — parity-preserved here), e.g. ``min_len=size``
-        for Pool; excluded conversations simply have no rows in the
-        operator tier, the same contract as a HAVING clause.
+        sub-block series — parity-preserved here); it defaults to the
+        op's ``min_length`` (Pool: its largest block size, 1 otherwise).
+        Excluded conversations simply have no rows in the operator tier,
+        the same contract as a HAVING clause.
         """
         from tsaug_spark.plans.pack import apply_operator
 
@@ -404,6 +434,8 @@ class RollupJob:
                 "instead"
             )
         value_cols = list(value_cols)
+        if min_len is None:
+            min_len = op.min_length
         fine_df = self.table(f"tier_{fine}").read(self.spark)
         todo = self._pending(out_name, partitions, resume)
 
@@ -490,41 +522,36 @@ class RollupJob:
         rollup; turns later than the update contract's grace window
         are dropped by design, exactly as in ``update()``.
 
-        Scale: the raw scan is pre-filtered by the GLOBAL minimum
-        watermark — a literal, so it pushes into the parquet scan and
-        prunes a ts-partitioned table to the recent tail — then
-        refined per partition with a broadcast join of the (tiny)
-        watermark table.  The driver collects exactly one scalar."""
-        if not self.manifest.exists():
+        Scale: the watermarks come from the job's lineage list, so the
+        view runs no manifest job.  Each row is cut at its partition's
+        watermark by a literal map lookup, and when every partition has
+        one, the raw scan is pre-filtered by their minimum, a literal
+        that pushes into the parquet scan and prunes a ts-partitioned
+        table to the recent tail.  A committed-empty partition (NULL
+        watermark) counts as having none: its full history comes from
+        raw."""
+        cuts = {
+            p: _ts_epoch(wm)
+            for p, wm in self._tier_watermarks(tier).items()
+            if wm is not None
+        }
+        if not cuts:
             return rollup_transcripts(transcripts, tier)
-        wm = self.watermarks(tier)
         stored = (
             self.table(f"tier_{tier}")
             .read(self.spark)
-            .join(F.broadcast(wm), "partition_id", "left")
-            .filter(F.col("bucket_ts") < F.col("watermark_ts"))
-            .drop("partition_id", "watermark_ts")
-        )
-        min_wm, n_committed = wm.agg(
-            F.min("watermark_ts"), F.count(F.lit(1))
-        ).collect()[0]
-        if min_wm is None:
-            return rollup_transcripts(transcripts, tier)
-        tail_src = transcripts
-        if n_committed == self.n_partitions:
-            # every partition has a watermark -> the global minimum is
-            # a safe literal pre-filter (pushes into the scan); with
-            # uncommitted partitions their full history must stay
-            tail_src = tail_src.filter(F.col("ts") >= F.lit(min_wm))
-        tail_src = (
-            tail_src.withColumn("partition_id", self._partition_col())
-            .join(F.broadcast(wm), "partition_id", "left")
             .filter(
-                F.col("watermark_ts").isNull()
-                | (F.col("ts") >= F.col("watermark_ts"))
+                F.col("bucket_ts") < _cut_lookup(cuts, F.col("partition_id"))
             )
-            .drop("partition_id", "watermark_ts")
+            .drop("partition_id")
         )
+        tail_src = transcripts
+        if all(p in cuts for p in range(self.n_partitions)):
+            tail_src = tail_src.filter(
+                F.col("ts") >= F.timestamp_seconds(F.lit(min(cuts.values())))
+            )
+        cut = _cut_lookup(cuts, self._partition_col())
+        tail_src = tail_src.filter(cut.isNull() | (F.col("ts") >= cut))
         return stored.unionByName(rollup_transcripts(tail_src, tier))
 
     def query_series(
@@ -806,7 +833,8 @@ class RollupJob:
 
     # ------------------------------------------------------ incremental
     def watermarks(self, tier: str) -> DataFrame:
-        """Latest committed rollup watermark per partition."""
+        """Latest committed rollup watermark per partition, as a view of
+        the manifest table (the job itself asks :meth:`_tier_watermarks`)."""
         return (
             self.manifest.read(self.spark)
             .filter(F.col("tier") == tier)
@@ -814,52 +842,27 @@ class RollupJob:
             .agg(F.max("watermark_ts").alias("watermark_ts"))
         )
 
-    def _watermark_map(self) -> dict:
-        """{(tier, partition_id): max watermark_ts} across ALL tiers,
-        loaded from the manifest ONCE per job object and maintained
-        incrementally by :meth:`_append_manifest` — so an
-        update() -> cascade_update() chain pays a single manifest read
-        instead of one per tier.  A second live job object over the
-        same work_dir sees its own snapshot (same caveat as any
-        driver-side plan cache); a fresh process reloads."""
-        cache = self.__dict__.get("_wm_map")
-        if cache is None:
-            cache = {}
-            if self.manifest.exists():
-                for r in (
-                    self.manifest.read(self.spark)
-                    .groupBy("tier", "partition_id")
-                    .agg(F.max("watermark_ts").alias("wm"))
-                    .collect()
-                ):
-                    cache[(r["tier"], r["partition_id"])] = r["wm"]
-            self.__dict__["_wm_map"] = cache
-        return cache
-
     def _tier_watermarks(self, tier: str) -> dict:
-        """{partition_id: watermark_ts} for one tier, via the cache."""
-        return {
-            p: wm
-            for (t, p), wm in self._watermark_map().items()
-            if t == tier
-        }
+        """{partition_id: max watermark_ts} for one tier, from the
+        lineage list: NULL (a committed-empty partition) only when every
+        row of the partition has a NULL watermark, as ``watermarks``."""
+        out: dict = {}
+        for t, p, _, wm in self._lineage():
+            if t == tier and (
+                out.get(p) is None or (wm is not None and wm > out[p])
+            ):
+                out[p] = wm
+        return out
 
     def _append_manifest(self, rows: list) -> None:
-        """Append manifest rows AND keep the watermark cache in sync —
-        every commit site routes through here so the cache can never
-        miss a watermark this job itself advanced.  The rows go to the
-        table as a pyarrow.Table: the snapshot table writes them on the
-        driver, with no Spark job."""
+        """Append manifest rows and extend the lineage list with them:
+        every commit site routes through here, so the list never misses
+        a row this job committed.  The rows go to the table as a
+        pyarrow.Table: the snapshot table writes them on the driver,
+        with no Spark job."""
         self.manifest.append(_manifest_table(rows))
-        cache = self.__dict__.get("_wm_map")
-        if cache is not None:
-            for r in rows:
-                key, wm = (r[0], r[1]), r[4]
-                old = cache.get(key)
-                if key not in cache or (
-                    wm is not None and (old is None or wm > old)
-                ):
-                    cache[key] = wm
+        if self._lineage_rows is not None:
+            self._lineage_rows.extend((r[0], r[1], r[2], r[4]) for r in rows)
 
     def _refresh_tails(
         self,
@@ -877,7 +880,8 @@ class RollupJob:
         ``source`` holds the rows to re-roll (with a ``partition_id``
         column), ``time_col`` their time, and ``roll`` turns its tail
         into ``tier`` rows.  Partitions with no committed watermark go
-        through ``full_build(partitions)`` (``None`` = all of them).
+        through ``full_build(partitions)``, which rebuilds them even when
+        the manifest records them (committed-empty) for this snapshot.
         ``clear_all`` replaces the tail of every watermarked partition,
         so one whose re-roll came back empty loses its stale tail;
         otherwise only partitions the re-roll returned rows for are
@@ -889,14 +893,12 @@ class RollupJob:
             for p, wm in self._tier_watermarks(tier).items()
             if wm is not None
         }
-        if not wms:
-            return full_build(None)
         # floor the cutoff to the tier bucket grid: a grace that is not
         # a multiple of the bucket width would otherwise KEEP the old
         # full-bucket row (bucket_ts < cut) while the re-roll emits a
         # partial aggregate for the SAME bucket from rows >= cut — two
         # conflicting rows per (conv, bucket).  Cutoffs are computed
-        # DRIVER-SIDE from the cached watermarks so the global minimum
+        # DRIVER-SIDE from the lineage list so the global minimum
         # is a LITERAL the source scan can prune on.
         width = TIERS[tier][1]
         g = _grace_seconds(grace)
@@ -905,6 +907,8 @@ class RollupJob:
         }
         missing = [p for p in range(self.n_partitions) if p not in cuts]
         touched = full_build(missing) if missing else 0
+        if not cuts:
+            return touched
 
         # one pass over every watermarked partition: the literal
         # min-cutoff prefilter reaches the scan (PushedFilters,
@@ -1000,7 +1004,9 @@ class RollupJob:
             transcripts.withColumn("partition_id", self._partition_col()),
             "ts",
             lambda src: rollup_transcripts(src, tier),
-            lambda ps: self.run(transcripts, tier, partitions=ps),
+            lambda ps: self.run(
+                transcripts, tier, partitions=ps, resume=False
+            ),
             clear_all=False,
         )
 
@@ -1038,7 +1044,7 @@ class RollupJob:
             "bucket_ts",
             lambda src: reaggregate(src, fine, coarse),
             lambda ps: self.cascade_tier(
-                fine, coarse, resume=ps is None, partitions=ps
+                fine, coarse, resume=False, partitions=ps
             ),
             clear_all=True,
         )
@@ -1072,7 +1078,7 @@ class RollupJob:
             if dur is None:
                 continue
             # the minimum over partitions of each one's max watermark,
-            # from the driver-side cache (no manifest job)
+            # from the lineage list (no manifest job)
             anchor = None
             for t in TIER_ORDER[i + 1:] + [tier]:
                 wms = [
@@ -1103,9 +1109,9 @@ class RollupJob:
             # plan over `cur` would re-read the already-overwritten table
             # and evaluate empty, leaving stale chunk rows alive.  The
             # distinct conv_id set is small (one row per expiring
-            # conversation), so a durable scratch commit is cheap.
-            scratch = self.table(f"_scratch_expiry_{tier}")
-            scratch.overwrite(
+            # conversation); an eager truncation holds it, as
+            # IcebergTable.overwrite does with its input.
+            expiring = truncate_lineage(
                 cur.filter(F.col("bucket_ts") < cutoff)
                 .select("conv_id")
                 .distinct()
@@ -1116,7 +1122,7 @@ class RollupJob:
             # conversations' surviving tier rows via the partition-scoped
             # rebuild (drops chunks of fully-expired conversations,
             # rebuilds the rest, touches only their partitions)
-            self._rebuild_chunks(tier, scratch.read(self.spark))
+            self._rebuild_chunks(tier, expiring)
 
             # range_start_ts = the anchor used, watermark_ts = the
             # expiry boundary

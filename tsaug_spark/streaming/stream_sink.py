@@ -14,7 +14,10 @@ caught-up table equals the batch rollup exactly — proven by test.
 Each merge is one since-bounded replace (``overwrite_partitions`` with
 ``since`` = the batch's earliest bucket): on Iceberg a condition
 overwrite, on the parquet-snapshot table a commit that keeps every data
-file older than the batch by reference.
+file older than the batch by reference.  The lineage row of a batch is
+skipped when ``RollupJob.snapshot_recorded`` finds its label already in
+the job's lineage list (foreachBatch is at-least-once), so the sink
+never reads the manifest itself.
 """
 
 from __future__ import annotations
@@ -75,45 +78,18 @@ def merge_batch_into_tier(
     else:
         t.append(rows)
     # foreachBatch is at-least-once: the merge above is idempotent on
-    # retry, but the lineage append is not — skip it when this batch_id
-    # already has a manifest row for this tier (ADVICE r2).  The seen
-    # set loads from the manifest ONCE per (job, tier, stream) and is
-    # maintained in-driver after that — a retry lands in the same
-    # driver with the same set, so the per-batch manifest re-read the
-    # old code paid is pure overhead (a NEW driver resuming the
-    # checkpoint reloads the set from the manifest on its first batch)
+    # retry, but the lineage append is not — skip it when this batch's
+    # label already has a manifest row for this tier
     snap = (
         f"stream-batch:{stream_id}:{batch_id}"
         if stream_id
         else f"stream-batch:{batch_id}"
     )
-    seen_key = (tier, stream_id)
-    seen_all = job.__dict__.setdefault("_stream_seen", {})
-    if seen_key not in seen_all:
-        prefix = (
-            f"stream-batch:{stream_id}:" if stream_id else "stream-batch:"
+    if not job.snapshot_recorded(tier, snap):
+        # streaming commits are not partition-scoped: partition_id -1
+        job._append_manifest(
+            [job._manifest_row(tier, -1, lo, wm, n, snapshot=snap)]
         )
-        seen = set()
-        if job.manifest.exists():
-            seen = {
-                r[0]
-                for r in job.manifest.read(spark)
-                .filter(
-                    (F.col("tier") == tier)
-                    & F.col("source_snapshot").startswith(prefix)
-                )
-                .select("source_snapshot")
-                .collect()
-            }
-        seen_all[seen_key] = seen
-    if snap in seen_all[seen_key]:
-        rows.unpersist()
-        return
-    # streaming commits are not partition-scoped: partition_id -1
-    job._append_manifest(
-        [job._manifest_row(tier, -1, lo, wm, n, snapshot=snap)]
-    )
-    seen_all[seen_key].add(snap)
     rows.unpersist()
 
 
