@@ -36,7 +36,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tsaug_spark.sources.tables import replace_condition
+from tsaug_spark.sources.tables import chunk_condition, replace_condition
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -106,6 +106,23 @@ class InPlaceLazyTable:
         if partitions is None:
             return df
         return df.filter(replace_condition("partition_id", partitions, since))
+
+    def read_arrow(
+        self,
+        spark: SparkSession,
+        columns: "list[str]",
+        conv_ids=None,
+        ts_lo=None,
+        ts_hi=None,
+    ) -> "pa.Table":
+        """Like ``IcebergTable.read_arrow``: the filtered read collected
+        with ``toArrow`` (a JVM-only Spark job)."""
+        return (
+            self.read(spark)
+            .filter(chunk_condition(conv_ids, ts_lo, ts_hi))
+            .select(*columns)
+            .toArrow()
+        )
 
     # --------------------------------------------------------- writes
     def _replace_dir(self, df: DataFrame) -> None:

@@ -3,9 +3,15 @@
 A *chunk row* packs one conversation's whole tier series into opaque
 ``binary`` columns — delta-of-delta timestamps + one Gorilla value chunk
 per metric channel — the storage layout of the retention tiers.  Encoding
-and decoding both run over raw Arrow batches (``mapInArrow`` + NumPy
-bit-packing — no per-row Python and no pandas materialization; conv_id
-strings move via Arrow ``take`` without ever becoming Python objects).
+and decoding both run over raw Arrow batches (NumPy bit-packing — no
+per-row Python and no pandas materialization; conv_id strings move via
+Arrow ``take`` without ever becoming Python objects).
+
+There is one decoder, ``decode_chunks``.  Spark callers (the query
+registry, perfbench's chunk checks, tests) reach it through
+``decompress_tier``/``decompress_tier_range``, a ``mapInArrow`` job;
+the dashboard read ``RollupJob.query_series`` calls it on the driver
+over the chunk rows ``read_arrow`` fetched, with no Spark job.
 
 Scale: chunk size is bounded by tier width (see plans/pack.py) and the
 chunk table is ~1000x smaller than the long tier, so downstream joins on
@@ -14,12 +20,16 @@ it broadcast.
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import TYPE_CHECKING, List, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 
 from .gorilla import decode_timestamps, decode_values
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    from pyspark.sql import Column
 
 
 def compress_tier(
@@ -184,62 +194,89 @@ def compress_tier(
     return prepared.mapInArrow(encode_stream, schema)
 
 
+def decode_chunks(chunks, value_cols: Sequence[str]) -> "pa.RecordBatch":
+    """Gorilla-decode chunk rows into long tier rows.
+
+    ``chunks`` is a ``pyarrow.Table`` or ``RecordBatch`` holding
+    ``conv_id``, ``ts_chunk`` and a ``<col>_chunk`` per ``value_cols``
+    channel; the result is one batch of (conv_id, bucket_ts, *value_cols)
+    with ``bucket_ts`` a tz-naive microsecond timestamp (UTC epoch).  One
+    decoder call per chunk row, then one concatenated output — the conv
+    strings fan out via Arrow ``take``, never via Python.  The Spark read
+    (``decompress_tier``, once per ``mapInArrow`` batch) and the driver
+    read (``RollupJob.query_series``) both decode through here.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    value_cols = list(value_cols)
+    if isinstance(chunks, pa.RecordBatch):
+        chunks = pa.Table.from_batches([chunks])
+    n = chunks.num_rows
+    conv = chunks.column("conv_id").combine_chunks()
+    ts_col_a = chunks.column("ts_chunk").combine_chunks()
+    val_cols_a = [
+        chunks.column(f"{c}_chunk").combine_chunks() for c in value_cols
+    ]
+    ts_parts: List[np.ndarray] = [np.empty(0, dtype=np.int64)]
+    val_parts: List[List[np.ndarray]] = [
+        [np.empty(0, dtype=np.float64)] for _ in value_cols
+    ]
+    lens = np.empty(n, dtype=np.int64)
+    for i in range(n):
+        ts = decode_timestamps(ts_col_a[i].as_py())
+        ts_parts.append(ts)
+        lens[i] = len(ts)
+        for k in range(len(value_cols)):
+            val_parts[k].append(decode_values(val_cols_a[k][i].as_py()))
+    idx = np.repeat(np.arange(n, dtype=np.int64), lens)
+    arrays = [
+        pc.take(conv, pa.array(idx)),
+        pa.array(
+            np.concatenate(ts_parts).astype(np.int64) * 10 ** 6,
+            type=pa.int64(),
+        ).cast(pa.timestamp("us")),
+        *[pa.array(np.concatenate(parts)) for parts in val_parts],
+    ]
+    return pa.RecordBatch.from_arrays(
+        arrays, names=["conv_id", "bucket_ts", *value_cols]
+    )
+
+
 def decompress_tier(
     df_chunks: DataFrame, value_cols: Sequence[str]
 ) -> DataFrame:
-    """Expand chunk rows back into the long tier layout."""
+    """Expand chunk rows back into the long tier layout, in a Spark job
+    (``mapInArrow`` over ``decode_chunks``)."""
     value_cols = list(value_cols)
     schema = (
         "conv_id string, bucket_ts timestamp, "
         + ", ".join(f"{c} double" for c in value_cols)
     )
 
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    names = ["conv_id", "bucket_ts", *value_cols]
-
     def decode_rows(batches):
         for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            conv = tbl.column("conv_id").combine_chunks()
-            ts_col_a = tbl.column("ts_chunk").combine_chunks()
-            val_cols_a = [
-                tbl.column(f"{c}_chunk").combine_chunks()
-                for c in value_cols
-            ]
-            # one decoder call per chunk row (a chunk row IS a whole
-            # conversation), then one concatenated output batch — the
-            # conv strings fan out via Arrow take, never via Python
-            ts_parts: List[np.ndarray] = []
-            val_parts: List[List[np.ndarray]] = [[] for _ in value_cols]
-            lens = np.empty(n, dtype=np.int64)
-            for i in range(n):
-                ts = decode_timestamps(ts_col_a[i].as_py())
-                ts_parts.append(ts)
-                lens[i] = len(ts)
-                for k in range(len(value_cols)):
-                    val_parts[k].append(
-                        decode_values(val_cols_a[k][i].as_py())
-                    )
-            idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-            arrays = [
-                pc.take(conv, pa.array(idx)),
-                pa.array(
-                    np.concatenate(ts_parts).astype(np.int64) * 10 ** 6,
-                    type=pa.int64(),
-                ).cast(pa.timestamp("us")),
-                *[
-                    pa.array(np.concatenate(val_parts[k]))
-                    for k in range(len(value_cols))
-                ],
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            if rb.num_rows:
+                yield decode_chunks(rb, value_cols)
 
     return df_chunks.mapInArrow(decode_rows, schema)
+
+
+def zone_map_overlaps(ts_lo=None, ts_hi=None) -> "Column":
+    """Chunk rows whose zone map [``ts_min``, ``ts_max``] overlaps
+    [``ts_lo``, ``ts_hi``] (timestamp Columns, inclusive; None leaves
+    that side open), as a Spark condition.  NULL zone maps (chunk rows
+    written before the zone-map columns existed, preserved by
+    allowMissingColumns appends) overlap everything: they are
+    MUST-DECODE, never silently excluded."""
+    from pyspark.sql import functions as F
+
+    cond = F.lit(True)
+    if ts_lo is not None:
+        cond = cond & (F.col("ts_max").isNull() | (F.col("ts_max") >= ts_lo))
+    if ts_hi is not None:
+        cond = cond & (F.col("ts_min").isNull() | (F.col("ts_min") <= ts_hi))
+    return cond
 
 
 def decompress_tier_range(
@@ -248,8 +285,11 @@ def decompress_tier_range(
     ts_lo=None,
     ts_hi=None,
 ):
-    """Chunk-exclusion read: decode only the chunks whose zone map
-    overlaps [``ts_lo``, ``ts_hi``] (inclusive).
+    """Chunk-exclusion read as a Spark job: decode only the chunks whose
+    zone map overlaps [``ts_lo``, ``ts_hi``] (inclusive).  The Spark-side
+    callers (registry queries, tests) use it; the dashboard read
+    ``RollupJob.query_series`` applies the same rule on the driver
+    (``read_arrow`` + ``decode_chunks``).
 
     The [ts_min, ts_max] predicate is a plain Catalyst filter on the
     chunk scan — with a parquet-backed chunk table it pushes into the
@@ -266,21 +306,12 @@ def decompress_tier_range(
     def lit(x):
         return x if isinstance(x, Column) else F.lit(x)
 
-    # NULL zone maps (chunk rows written before the zone-map columns
-    # existed, preserved by allowMissingColumns appends) must be
-    # treated as MUST-DECODE, not silently excluded
-    pruned = df_chunks
-    if ts_lo is not None:
-        pruned = pruned.filter(
-            F.col("ts_max").isNull() | (F.col("ts_max") >= lit(ts_lo))
-        )
-    if ts_hi is not None:
-        pruned = pruned.filter(
-            F.col("ts_min").isNull() | (F.col("ts_min") <= lit(ts_hi))
-        )
-    out = decompress_tier(pruned, value_cols)
-    if ts_lo is not None:
-        out = out.filter(F.col("bucket_ts") >= lit(ts_lo))
-    if ts_hi is not None:
-        out = out.filter(F.col("bucket_ts") <= lit(ts_hi))
+    lo = None if ts_lo is None else lit(ts_lo)
+    hi = None if ts_hi is None else lit(ts_hi)
+    out = decompress_tier(df_chunks.filter(zone_map_overlaps(lo, hi)),
+                          value_cols)
+    if lo is not None:
+        out = out.filter(F.col("bucket_ts") >= lo)
+    if hi is not None:
+        out = out.filter(F.col("bucket_ts") <= hi)
     return out

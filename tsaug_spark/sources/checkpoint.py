@@ -33,8 +33,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Optional, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -47,7 +49,7 @@ from pyspark.sql.types import (
 
 from tsaug_spark.lineage import truncate_lineage
 
-from tsaug_spark.codec.chunks import compress_tier
+from tsaug_spark.codec.chunks import compress_tier, decode_chunks
 from tsaug_spark.plans.rollup import (
     METRIC_COLS,
     TIER_ORDER,
@@ -71,6 +73,58 @@ MANIFEST_SCHEMA = StructType([
 ])
 
 
+#: ``query_series`` rows: the tier layout ``decompress_tier`` returns
+SERIES_SCHEMA = StructType(
+    [StructField("conv_id", StringType()),
+     StructField("bucket_ts", TimestampType())]
+    + [StructField(c, DoubleType()) for c in METRIC_COLS]
+)
+#: ``query_series`` rows under M4, one per (conv_id, pixel)
+M4_SCHEMA = StructType(
+    [StructField("conv_id", StringType()),
+     StructField("px_ts", TimestampType())]
+    + [StructField(c, DoubleType())
+       for c in ("vmin", "vmax", "vfirst", "vlast")]
+)
+
+
+def _m4(rows, value_col: str, px: int):
+    """M4 of ``value_col`` over ``px``-second pixels, on the driver:
+    ``rows`` (a ``pyarrow.RecordBatch`` in the ``SERIES_SCHEMA``
+    layout, sorted by conv_id then bucket_ts) become one row per
+    (conv_id, ``px_ts`` = floor(epoch/px)*px) with Spark's aggregate
+    semantics: ``vmin``/``vmax`` order NaN above every number (so a
+    pixel's min is NaN only when all of it is, its max whenever any of
+    it is), ``vfirst``/``vlast`` are the values at its first and last
+    bucket."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = rows.num_rows
+    conv = rows.column("conv_id")
+    pix = rows.column("bucket_ts").cast(pa.int64()).to_numpy() // 10**6
+    pix = pix // px * px
+    new = np.ones(n, dtype=bool)
+    if n > 1:
+        new[1:] = pc.not_equal(
+            conv.slice(1), conv.slice(0, n - 1)
+        ).to_numpy(zero_copy_only=False) | (pix[1:] != pix[:-1])
+    starts = np.flatnonzero(new)
+    ends = np.flatnonzero(np.roll(new, -1))
+    v = rows.column(value_col).to_numpy(zero_copy_only=False)
+    return pa.RecordBatch.from_arrays(
+        [
+            pc.take(conv, pa.array(starts)),
+            pa.array(pix[starts] * 10**6).cast(pa.timestamp("us")),
+            pa.array(np.fmin.reduceat(v, starts) if n else v),
+            pa.array(np.maximum.reduceat(v, starts) if n else v),
+            pa.array(v[starts]),
+            pa.array(v[ends]),
+        ],
+        names=M4_SCHEMA.names,
+    )
+
+
 def _manifest_table(rows: list):
     """Manifest ``rows`` (tuples in ``MANIFEST_SCHEMA`` order) as a
     ``pyarrow.Table`` holding exactly the values
@@ -78,7 +132,6 @@ def _manifest_table(rows: list):
     through ``MANIFEST_SCHEMA.toInternal`` (timestamps via
     ``TimestampType.toInternal``)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(MANIFEST_SCHEMA)
     internal = [MANIFEST_SCHEMA.toInternal(r) for r in rows]
@@ -171,12 +224,14 @@ class RollupJob:
     work_dir: str
     n_partitions: int = 8
     source_snapshot: str = "unversioned"
-    # backend: any class exposing the TableLike contract (read/append/
-    # overwrite/overwrite_partitions/snapshot_id/exists) constructed
-    # from a path-like identifier — ParquetSnapshotTable in-sandbox,
-    # IcebergTable on a cluster (tests/test_checkpoint.py parametrizes
-    # the contract over both semantics).  ``append`` must take a
-    # pyarrow.Table as well as a DataFrame: manifest commits pass one.
+    # backend: any class exposing the TableLike contract (read/
+    # read_arrow/append/overwrite/overwrite_partitions/snapshot_id/
+    # exists) constructed from a path-like identifier —
+    # ParquetSnapshotTable in-sandbox, IcebergTable on a cluster
+    # (tests/test_checkpoint.py parametrizes the contract over both
+    # semantics).  ``append`` must take a pyarrow.Table as well as a
+    # DataFrame: manifest commits pass one.  ``read_arrow`` returns one:
+    # query_series decodes the chunk rows it fetches on the driver.
     table_cls: type = ParquetSnapshotTable
     _tables: dict = field(default_factory=dict)
     _lineage_rows: "Optional[list]" = field(
@@ -565,19 +620,33 @@ class RollupJob:
         """Dashboard read path: serve [``ts_lo``, ``ts_hi``] (epoch
         seconds) from the FINEST retention tier whose bucket count
         fits ``max_points``; if even the coarsest tier overflows the
-        budget, M4-downsample it to pixel buckets (min/max/first/last
-        — the lossless line-rendering reduction).
+        budget, M4-downsample ``value_col`` to pixel buckets
+        (min/max/first/last — the lossless line-rendering reduction).
 
-        The tier choice is pure driver arithmetic (span / bucket
-        width); the read is the chunk-exclusion path — the zone-map
-        range filter and any ``conv_ids`` filter apply to CHUNK rows
-        before the Gorilla decode, so excluded chunks' binary columns
-        are never decoded.  Returns ``(df, tier, m4_applied)``:
-        tier rows (conv_id, bucket_ts, metrics...) normally, or
-        (conv_id, px_ts, vmin, vmax, vfirst, vlast) under M4.
+        Answered on the driver, with no Spark job: the tier choice is
+        span / bucket width; the chunk table's ``read_arrow`` fetches
+        only the chunk rows of ``conv_ids`` (None: all) whose zone map
+        overlaps the range (NULL zone maps must be decoded), so excluded
+        chunks are never decoded; ``decode_chunks`` decodes them and
+        NumPy trims the rows to the range and computes M4 with Spark's
+        ``min``/``max``/``min_by``/``max_by`` semantics (NaN orders
+        above every number).  Returns ``(df, tier, m4_applied)``, ``df``
+        a local relation sorted by (conv_id, time): tier rows
+        (``SERIES_SCHEMA``) normally, or ``M4_SCHEMA`` rows under M4.
         """
-        from tsaug_spark.codec.chunks import decompress_tier_range
+        import math
 
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if isinstance(conv_ids, str):
+            raise TypeError(
+                "conv_ids must be a sequence of conversation ids, not a str"
+            )
+        if value_col not in METRIC_COLS:
+            raise ValueError(
+                f"value_col must be one of {METRIC_COLS}, not {value_col!r}"
+            )
         span = int(ts_hi) - int(ts_lo)
         if span <= 0:
             raise ValueError("ts_hi must be > ts_lo")
@@ -586,50 +655,33 @@ class RollupJob:
             if span / TIERS[tier][1] <= max_points:
                 chosen = tier
                 break
-        chunks = self.table(f"tier_{chosen}_chunks").read(self.spark)
-        if conv_ids is not None:
-            chunks = chunks.filter(
-                F.col("conv_id").isin(list(conv_ids))
-            )
+        width = TIERS[chosen][1]
         # include the partially-covered leading bucket: a 1d bucket
         # starting at midnight covers a ts_lo of 00:17, so the row
         # filter keys on bucket STARTS floored to the tier width
-        lo_eff = (int(ts_lo) // TIERS[chosen][1]) * TIERS[chosen][1]
-        rows = decompress_tier_range(
-            chunks,
-            METRIC_COLS,
-            ts_lo=F.timestamp_seconds(F.lit(lo_eff)),
-            ts_hi=F.timestamp_seconds(F.lit(int(ts_hi))),
+        lo_eff = (int(ts_lo) // width) * width
+        chunks = self.table(f"tier_{chosen}_chunks").read_arrow(
+            self.spark,
+            ["conv_id", "ts_chunk", *[f"{c}_chunk" for c in METRIC_COLS]],
+            conv_ids=conv_ids,
+            ts_lo=lo_eff,
+            ts_hi=int(ts_hi),
         )
-        if span / TIERS[chosen][1] <= max_points:
-            return rows, chosen, False
-        import math
-
-        px = max(
-            TIERS[chosen][1],
-            int(math.ceil(span / max(1, max_points // 4))),
+        rows = decode_chunks(chunks, METRIC_COLS)
+        epoch = rows.column("bucket_ts").cast(pa.int64()).to_numpy() // 10**6
+        rows = rows.filter(
+            pa.array((epoch >= lo_eff) & (epoch <= int(ts_hi)))
         )
-        e = F.unix_timestamp("bucket_ts")
-        m4 = (
-            rows.withColumn(
-                "px_ts",
-                F.timestamp_seconds(
-                    (F.floor(e / F.lit(px)) * F.lit(px)).cast("long")
-                ),
-            )
-            .groupBy("conv_id", "px_ts")
-            .agg(
-                F.min(value_col).alias("vmin"),
-                F.max(value_col).alias("vmax"),
-                F.expr(
-                    f"min_by({value_col}, bucket_ts)"
-                ).alias("vfirst"),
-                F.expr(
-                    f"max_by({value_col}, bucket_ts)"
-                ).alias("vlast"),
-            )
-        )
-        return m4, chosen, True
+        rows = rows.take(pc.sort_indices(
+            rows, [("conv_id", "ascending"), ("bucket_ts", "ascending")]
+        ))
+        if span / width <= max_points:
+            out, schema, m4 = rows, SERIES_SCHEMA, False
+        else:
+            px = max(width, int(math.ceil(span / max(1, max_points // 4))))
+            out, schema, m4 = _m4(rows, value_col, px), M4_SCHEMA, True
+        table = pa.Table.from_batches([out]).cast(to_arrow_schema(schema))
+        return self.spark.createDataFrame(table, schema), chosen, m4
 
     def compact_tables(
         self,

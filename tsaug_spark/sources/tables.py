@@ -5,6 +5,9 @@ SURVEY.md §7.4 R4).
 Both formats expose the same operations the engine needs:
 
 * ``read(spark)``                 -> DataFrame of the current snapshot
+* ``read_arrow(spark, columns, conv_ids, ts_lo, ts_hi)``
+                                  -> ``pyarrow.Table`` of the chunk rows
+                                     a dashboard read decodes
 * ``append`` / ``overwrite`` / ``overwrite_partitions``
                                   -> atomically advance the snapshot
 * ``snapshot_id()``               -> lineage token recorded in checkpoints
@@ -43,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructField, StructType, TimestampType
 
+from tsaug_spark.codec.chunks import zone_map_overlaps
 from tsaug_spark.lineage import truncate_lineage
 
 if TYPE_CHECKING:
@@ -65,6 +69,43 @@ def replace_condition(partition_col: str, partitions, since=None):
     cond = F.col(partition_col).isin([_plain(p) for p in partitions])
     if since is not None:
         cond = cond & (F.col(TIME_COL) >= F.lit(since))
+    return cond
+
+
+def chunk_condition(conv_ids=None, ts_lo=None, ts_hi=None):
+    """The chunk rows ``read_arrow`` returns, as a Spark condition:
+    ``conv_id`` in ``conv_ids`` (when given) and a zone map
+    [``ts_min``, ``ts_max``] overlapping [``ts_lo``, ``ts_hi``] (epoch
+    seconds, inclusive; either may be None) by the rule of
+    ``zone_map_overlaps``, where a NULL zone map overlaps."""
+
+    def at(epoch_s):
+        return None if epoch_s is None else F.timestamp_seconds(
+            F.lit(int(epoch_s)))
+
+    cond = zone_map_overlaps(at(ts_lo), at(ts_hi))
+    if conv_ids is not None:
+        cond = cond & F.col("conv_id").isin(list(conv_ids))
+    return cond
+
+
+def _chunk_expression(conv_ids=None, ts_lo=None, ts_hi=None):
+    """``chunk_condition`` as a ``pyarrow.dataset`` filter expression."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    def at(epoch_s):
+        return pa.scalar(int(epoch_s) * 10 ** 6, pa.timestamp("us", tz="UTC"))
+
+    cond = ds.scalar(True)
+    if conv_ids is not None:
+        cond = cond & ds.field("conv_id").isin(list(conv_ids))
+    if ts_lo is not None:
+        ts_max = ds.field("ts_max")
+        cond = cond & (ts_max.is_null() | (ts_max >= at(ts_lo)))
+    if ts_hi is not None:
+        ts_min = ds.field("ts_min")
+        cond = cond & (ts_min.is_null() | (ts_min <= at(ts_hi)))
     return cond
 
 
@@ -164,6 +205,9 @@ class ParquetSnapshotTable:
 
     * ``read``: a table scan; with ``partitions``/``since``, a filtered
       scan that plans only the files whose stats can match;
+    * ``read_arrow``: pyiceberg's ``Table.scan(row_filter,
+      selected_fields).to_arrow()``, a scan on the driver into a
+      ``pyarrow.Table`` (the read-side twin of appending one);
     * ``append``: ``AppendFiles`` (``INSERT INTO``); a DataFrame is
       written by a Spark job, a ``pyarrow.Table`` on the driver;
     * ``overwrite``: a full replace (``INSERT OVERWRITE`` of an
@@ -289,6 +333,34 @@ class ParquetSnapshotTable:
         files = self._classify(meta, partitions, since)
         return self._scan(spark, meta, files["some"] + files["all"]).filter(
             replace_condition("partition_id", partitions, since)
+        )
+
+    def read_arrow(
+        self,
+        spark: SparkSession,
+        columns: "list[str]",
+        conv_ids=None,
+        ts_lo=None,
+        ts_hi=None,
+    ) -> "pa.Table":
+        """``columns`` of the current snapshot's rows that match
+        ``chunk_condition(conv_ids, ts_lo, ts_hi)``, scanned on the
+        driver by ``pyarrow.dataset`` under the stored schema (a column
+        a file lacks reads as NULL): no Spark job.  Row groups whose
+        footer stats rule the filter out are skipped unread."""
+        import pyarrow.dataset as ds
+
+        meta = self._resolve()
+        if meta is None:
+            raise FileNotFoundError(f"no snapshot at {self.path}")
+        dataset = ds.dataset(
+            [os.path.join(self.path, f["path"]) for f in meta["files"]],
+            schema=to_arrow_schema(StructType.fromJson(meta["schema"])),
+            format="parquet",
+        )
+        return dataset.to_table(
+            columns=list(columns),
+            filter=_chunk_expression(conv_ids, ts_lo, ts_hi),
         )
 
     def _classify(self, meta: dict, partitions, since) -> dict:
@@ -651,6 +723,26 @@ class IcebergTable:
         if partitions is None:
             return df
         return df.filter(replace_condition("partition_id", partitions, since))
+
+    def read_arrow(
+        self,
+        spark: SparkSession,
+        columns: "list[str]",
+        conv_ids=None,
+        ts_lo=None,
+        ts_hi=None,
+    ) -> "pa.Table":
+        """``columns`` of the rows matching ``chunk_condition``, as a
+        ``pyarrow.Table``: a filtered scan collected with ``toArrow``
+        (JVM-only, no Python worker).  pyiceberg's ``Table.scan(
+        row_filter, selected_fields).to_arrow()`` is the driver-side
+        equivalent where it is installed."""
+        return (
+            self.read(spark)
+            .filter(chunk_condition(conv_ids, ts_lo, ts_hi))
+            .select(*columns)
+            .toArrow()
+        )
 
     def snapshot_id(self) -> str | None:
         spark = SparkSession.getActiveSession()
